@@ -3,7 +3,9 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash). ``queries()`` lists every corpus name
+exactly once, in registration order; ``oracle_sql()`` covers the
+hash-checkable subset.
 
 The corpus itself lives in ``iceberg_rs_spark.plans`` — one
 registered (builder, oracle) pair per operator from SURVEY.md §2.

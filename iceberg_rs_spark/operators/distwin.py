@@ -25,7 +25,8 @@ their DuckDB oracles unchanged.
 Callers pass sort expressions (``F.col("x").desc()`` works; tiebreak
 to a unique key for deterministic output, same as the SQL side).
 Persisted barrier frames register with packing's cache registry;
-``packing.release_caches()`` (bench calls it per query) frees them.
+``packing.release_caches()`` (call it after each consuming action) frees
+them.
 """
 
 from __future__ import annotations
@@ -271,7 +272,7 @@ def prefix_scan_keyed(
     the SQL side. Differential-pinned against the native per-key
     window plan (random, hot-key, null, and multi-weight arms) in
     tests/test_distwin.py; scale curve measured by the prefix arm of
-    scripts/window_skew_probe.py."""
+    ``window_skew_probe.py`` (last present in commit e5511a3)."""
     from pyspark.storagelevel import StorageLevel
 
     from iceberg_rs_spark.operators.packing import _PERSISTED, _resolve_partitions

@@ -218,9 +218,9 @@ def triangles_degree_oriented(
     the max OUT-degree of the orientation, which is O(sqrt(m)) for any
     graph [Chiba-Nishizeki arboricity bound]: the hub's edges all point
     INTO it, so the hub generates zero wedges, and total wedge count is
-    O(m^1.5) regardless of skew — measured in
-    scripts/graph_skew_probe.py as alpha~=2 naive vs alpha~=1 oriented
-    on a 20%-of-edges hub at 1x/10x.
+    O(m^1.5) regardless of skew — measured as alpha~=2 naive vs
+    alpha~=1 oriented on a 20%-of-edges hub at 1x/10x (by
+    ``graph_skew_probe.py``, last present in commit e5511a3).
 
     Every triangle {x,y,z} is produced exactly once, as (a, b, c) =
     (rank-min, rank-mid, rank-max) under the (degree, id) rank — the
@@ -296,7 +296,8 @@ def common_neighbor_pairs(
     neighbour of degree d contributes C(d, 2) pairs: Σ deg² output, and
     a power-law hub adjacent to a constant fraction of the nodes makes
     the OUTPUT itself quadratic — no join strategy fixes that (VERDICT
-    r12 ask #3; measured alpha~=2 in scripts/graph_skew_probe.py).
+    r12 ask #3; measured alpha~=2 by ``graph_skew_probe.py``, last
+    present in commit e5511a3).
 
     With ``max_neighbor_degree`` set, neighbours whose degree exceeds
     the cap are EXCLUDED from wedge generation — the link-prediction

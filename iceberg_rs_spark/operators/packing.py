@@ -34,7 +34,8 @@ _PERSISTED: list[DataFrame] = []
 def release_caches() -> int:
     """Unpersist every barrier frame cached by prior
     :func:`with_global_offset` / :func:`pack_bins` calls. Call after
-    the consuming action completes (bench harness does, per query);
+    the consuming action completes (a harness running many queries
+    calls it per query);
     returns the number of frames released. The handle also rides on
     the returned DataFrame as ``_icelake_packing_cache`` (the
     z-order-rewrite pattern) for callers that want per-result

@@ -5,8 +5,10 @@ shape behind the events family — serializes a key's entire history
 into ONE task: a bot user holding 20% of a 100 TB stream turns the
 window stage into a single-core scan of 20 TB, and neither AQE skew
 handling (joins/aggregations only) nor salting (sessions need a total
-order per key) helps. ``scripts/window_skew_probe.py`` measures the
-penalty at cores x hot-share.
+order per key) helps. ``window_skew_probe.py`` (last present in commit
+e5511a3) measured the penalty, which tends to cores x hot-share: at
+8M rows the window plan's 20%-hot arm ran 2.46x its uniform arm,
+while this chunked plan stayed flat (0.79x).
 
 ``session_counts_distributed`` computes the same per-user
 ``(n_sessions, n_events)`` without ever holding a key in one task —

@@ -105,7 +105,8 @@ def spread_partitions(
 ) -> int:
     """Input-size-derived partition count for spreading a NARROW
     relation before per-row-heavy work: ceil(estimated bytes / target)
-    clamped to [2, cap]. The estimate is the optimizer's sizeInBytes
+    clamped to [2, cap]; a ``cap`` below 2 wins, so the result never
+    exceeds ``cap``. The estimate is the optimizer's sizeInBytes
     (file-size-based for scans — computed without running a job); when
     unavailable, falls back to ``cap`` (the pre-r15 behavior).
     ``target_bytes`` overrides the conf for compute-dense callsites
@@ -126,7 +127,7 @@ def spread_partitions(
             )
         except (TypeError, ValueError):
             target = SPREAD_TARGET_BYTES_DEFAULT
-    return max(2, min(cap, -(-size // target)))
+    return min(cap, max(2, -(-size // target)))
 
 
 def spread_by_range(

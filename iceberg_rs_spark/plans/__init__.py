@@ -7,12 +7,9 @@ DuckDB oracle SQL) pair consumed by ``__spark_entry__`` and the tests.
 
 from iceberg_rs_spark.plans.corpus import CORPUS, QuerySpec, query  # noqa: F401
 
-# Populate the registry.  The driver-facing order is now controlled by
-# the explicit ``corpus.PRIORITY`` list (queries needing a fresh driver
-# CORRECTNESS row go first); import order below only decides the tail.
-# Tail order: families whose last green driver row is OLDEST first
-# (r1-verified families), so each round's 50-query window refreshes the
-# stalest evidence after the PRIORITY head.
+# Populate the registry.  ``corpus.queries()`` and ``corpus.oracle_sql()``
+# emit names in registration order, so the import order below is the
+# order in which every consumer sees the corpus.
 import iceberg_rs_spark.plans.tpch  # noqa: F401,E402
 import iceberg_rs_spark.plans.joins  # noqa: F401,E402
 import iceberg_rs_spark.plans.aggregates  # noqa: F401,E402

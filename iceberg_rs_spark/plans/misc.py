@@ -229,14 +229,25 @@ def ts_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # second derivation, no join, no barrier; linear in present hours
     # at any scale. The interpolation expression reproduces the same
     # IEEE operation order as the window form.
+    #
+    # An hour whose values are all NULL has a NULL average: it still
+    # bounds the grid [mn, mx] but is no neighbour, so the chain links
+    # valued hours only (lead ... IGNORE NULLS). The last valued hour
+    # runs on to mx, and a user's first hour, if NULL, emits the
+    # leading stretch up to the first valued hour; both stretches have
+    # no neighbour on one side and so stay NULL, as in the oracle.
     w = Window.partitionBy("user_id").orderBy("hidx")
     nxt = hourly.select(
         "user_id",
         F.col("hidx").alias("ph"),
         F.col("v").alias("pv"),
-        F.lead("hidx").over(w).alias("nh"),
-        F.lead("v").over(w).alias("nv"),
-    )
+        F.expr("lead(CASE WHEN v IS NOT NULL THEN hidx END) IGNORE NULLS")
+        .over(w)
+        .alias("nh"),
+        F.expr("lead(v) IGNORE NULLS").over(w).alias("nv"),
+        F.lag("hidx").over(w).isNull().alias("first"),
+        F.max("hidx").over(Window.partitionBy("user_id")).alias("mx"),
+    ).where(F.col("pv").isNotNull() | F.col("first"))
     span = nxt.select(
         "user_id",
         "ph",
@@ -244,9 +255,7 @@ def ts_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nh",
         "nv",
         F.explode(
-            F.sequence(
-                F.col("ph"), F.coalesce(F.col("nh") - 1, F.col("ph"))
-            )
+            F.sequence(F.col("ph"), F.coalesce(F.col("nh") - 1, F.col("mx")))
         ).alias("hidx"),
     )
     interp = F.col("pv") + (F.col("nv") - F.col("pv")) * (
@@ -258,7 +267,9 @@ def ts_gapfill_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
         rhalf(
             F.when(F.col("hidx") == F.col("ph"), F.col("pv")).otherwise(interp), 4
         ).alias("value"),
-        (F.col("hidx") != F.col("ph")).alias("interpolated"),
+        ((F.col("hidx") != F.col("ph")) | F.col("pv").isNull()).alias(
+            "interpolated"
+        ),
     ).orderBy("user_id", "hidx")
 
 

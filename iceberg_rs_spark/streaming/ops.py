@@ -120,7 +120,9 @@ def replay_to_icelake(
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     # terminated query handle: recentProgress carries the per-batch
-    # metrics the state-size probe reads (scripts/streaming_state_probe.py)
+    # state-store metrics; the state-size probe (streaming_state_probe.py,
+    # last present in commit e5511a3) read them to show O(keys) session
+    # state and watermark-bounded join state
     return q
 
 

@@ -19,19 +19,6 @@ from iceberg_rs_spark.sources.fixtures import TABLES  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
-def diff_seeds(*seeds: int) -> tuple:
-    """Seed list for the randomized differential sweeps. Default: the
-    first two seeds, so every gate (both commit backends, every op
-    kind's vacuity assertion — verified to hold at depth 2, the RNG is
-    deterministic) still runs inside the driver's verify budget
-    (VERDICT r14 #1: the suite had outgrown it). Set
-    SPARK_GRAFT_FULL_DIFF=1 for the full-depth per-round ritual run —
-    the r15 round notes record one."""
-    if os.environ.get("SPARK_GRAFT_FULL_DIFF") == "1":
-        return seeds
-    return seeds[:2]
-
-
 @pytest.fixture(scope="session")
 def spark():
     # r15: 8 shuffle partitions for the suite (default = core count =
@@ -42,13 +29,13 @@ def spark():
     # 8 exactly as they would be at any cluster width; the one test
     # that pins the conf-tracking behavior sets its own value.
     s = get_spark(app_name="iceberg_rs_spark-tests", shuffle_partitions=8)
-    # Fill the Python worker pool to full width once per test session
-    # (same rationale as bench.warmup): the first K-wide Arrow/pandas
-    # stage otherwise pays K cold worker forks + numpy/pandas imports
-    # (measured ~25 s for a 32-wide first stage) inside whichever test
-    # reaches it first, and tests that never reach full width re-pay a
-    # few cold workers each. One 1-row-per-partition mapInPandas pass
-    # amortizes it for the whole suite via spark.python.worker.reuse.
+    # Fill the Python worker pool to full width once per test session:
+    # the first K-wide Arrow/pandas stage otherwise pays K cold worker
+    # forks + numpy/pandas imports (measured ~25 s for a 32-wide first
+    # stage) inside whichever test reaches it first, and tests that
+    # never reach full width re-pay a few cold workers each. One
+    # 1-row-per-partition mapInPandas pass amortizes it for the whole
+    # suite via spark.python.worker.reuse.
     def _warm_pool(batches):
         import time as _t
 

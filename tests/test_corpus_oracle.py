@@ -27,21 +27,9 @@ def test_entry_smoke(spark):
     df = e.entry(spark)
     rows = df.collect()
     assert len(rows) >= 0
-    assert len(e.queries()) == len(CORPUS)
+    # Every registered name exactly once, in registration order.
+    assert list(e.queries()) == list(CORPUS)
     assert set(e.oracle_sql()) <= set(e.queries())
-
-
-def test_priority_queries_lead_registry():
-    """The driver verifies only the first 50 queries() entries per round;
-    names in corpus.PRIORITY (no/stale driver row) must come first."""
-    import __spark_entry__ as e
-    from iceberg_rs_spark.plans import corpus
-
-    names = list(e.queries())
-    registered_priority = [n for n in corpus.PRIORITY if n in corpus.CORPUS]
-    assert names[: len(registered_priority)] == registered_priority
-    # Everything registered is still present exactly once.
-    assert sorted(names) == sorted(corpus.CORPUS)
 
 
 @pytest.mark.parametrize(
@@ -70,6 +58,65 @@ def test_timezone_independence(name, spark, duck, sf_dir):
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
     assert_frames_match(spark_pdf, duck.sql(spec.oracle).df(), name=f"tz:{name}")
+
+
+def test_gapfill_null_avg_hours(spark, tmp_path):
+    """An hour whose events all carry a NULL value has a NULL
+    ``AVG(value)``: it still bounds the user's hour grid, but it is no
+    interpolation neighbour. Covers such an hour inside a span, at a
+    user's first and last hour, an all-NULL user, and a NULL hour
+    before the first valued one. The sf fixtures hold no NULL values,
+    so the corpus sweep cannot see this."""
+    import datetime as dt
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t0 = dt.datetime(2024, 3, 1)
+    rows = [
+        # user 1: NULL first hour, valued 1, NULL 3 (inside), valued 5,
+        # NULL last hour 7; gaps at 2, 4 and 6
+        (1, 0, None), (1, 0, None), (1, 1, 2.0), (1, 1, None), (1, 1, 4.0),
+        (1, 3, None), (1, 5, 10.0), (1, 7, None),
+        # user 2: every value NULL
+        (2, 2, None), (2, 6, None),
+        # user 3: two NULL hours before the first valued one
+        (3, 0, None), (3, 2, None), (3, 4, 7.5), (3, 8, 1.25),
+        # user 4: no NULLs (the path the fixtures cover)
+        (4, 1, 3.0), (4, 4, 6.0),
+    ]
+    tbl = pa.table(
+        {
+            "event_id": pa.array(range(len(rows)), pa.int64()),
+            "ts": pa.array(
+                [
+                    t0 + dt.timedelta(hours=h, minutes=i)
+                    for i, (_, h, _) in enumerate(rows)
+                ],
+                pa.timestamp("us"),
+            ),
+            "user_id": pa.array([u for u, _, _ in rows], pa.int64()),
+            "event_type": pa.array(["view"] * len(rows), pa.string()),
+            "value": pa.array([v for _, _, v in rows], pa.float64()),
+            "props": pa.array(["{}"] * len(rows), pa.string()),
+        }
+    )
+    pq.write_table(tbl, tmp_path / "events.parquet")
+
+    spec = CORPUS["ts_gapfill_interpolate"]
+    con = duckdb.connect()
+    con.execute("SET TimeZone='UTC'")
+    con.execute(
+        f"CREATE VIEW events AS SELECT * FROM read_parquet('{tmp_path}/events.parquet')"
+    )
+    try:
+        duck_pdf = con.sql(spec.oracle).df()
+    finally:
+        con.close()
+    assert len(duck_pdf) == 8 + 5 + 9 + 4
+    spark_pdf = spec.builder(spark, str(tmp_path)).toPandas()
+    assert_frames_match(spark_pdf, duck_pdf, name="ts_gapfill_interpolate:null-avg")
 
 
 class TestGateCanary:

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from iceberg_rs_spark.sources.fixtures import load_table
 from iceberg_rs_spark.sources.icelake import Catalog
-from tests.conftest import diff_seeds
 
 
 @pytest.fixture()
@@ -2684,7 +2683,7 @@ class TestRandomizedLifecycleDifferential:
         from collections import Counter
 
         ops_seen: Counter = Counter()
-        for seed in diff_seeds(11, 23, 37):
+        for seed in (11, 23, 37):
             rnd = random.Random(seed)
             t = catalog.create_table(
                 f"db.rand_lifecycle_{seed}",
@@ -3248,7 +3247,7 @@ class TestRandomizedLifecycleDifferential:
             return sorted((i, *v) for i, v in st.items())
 
         ops_seen: Counter = Counter()
-        for seed in diff_seeds(101, 307, 211):
+        for seed in (101, 307, 211):
             rnd = random.Random(seed)
 
             def mk_uuid():
@@ -4327,7 +4326,7 @@ class TestRandomizedRollupMaintenance:
         ops_seen: Counter = Counter()
         spanning_refreshes = 0  # refreshes whose range crossed a compaction
         rebases = 0  # refreshes that hit a delete and fell back to rebuild
-        for seed in diff_seeds(5, 17, 41):
+        for seed in (5, 17, 41):
             rnd = random.Random(seed)
             t = catalog.create_table(
                 f"db.rand_rollup_{seed}",
