@@ -13,13 +13,17 @@ from hypothesis import strategies as st
 
 from iceberg_rs_spark.model import (
     IceField,
+    IceList,
+    IceMap,
     IcePrimitive,
     IceSchema,
     IceStruct,
+    NameMapping,
     PartitionField,
     PartitionSpec,
     Reference,
     Snapshot,
+    SnapshotLogEntry,
     SortField,
     SortOrder,
     TableMetadata,
@@ -29,6 +33,7 @@ from iceberg_rs_spark.model import (
     spark_to_ice,
     type_to_json,
 )
+from iceberg_rs_spark.model.types import max_field_id
 from pyspark.sql import types as T
 
 # The reference's own test fixture (reference: src/model/table.rs:110-160).
@@ -315,3 +320,433 @@ primitive_names_st = st.one_of(
 @given(primitive_names_st)
 def test_primitive_round_trip_prop(name):
     assert type_to_json(parse_type(name)) == name
+
+
+# ---------------------------------------------------------------------------
+# Per-case behavior of the model's mappings, validators and accessors
+# ---------------------------------------------------------------------------
+
+
+class TestSparkMapping:
+    @pytest.mark.parametrize(
+        "name, spark_type",
+        [
+            ("boolean", T.BooleanType()),
+            ("int", T.IntegerType()),
+            ("long", T.LongType()),
+            ("float", T.FloatType()),
+            ("double", T.DoubleType()),
+            ("decimal(9,2)", T.DecimalType(9, 2)),
+            ("date", T.DateType()),
+            ("time", T.LongType()),
+            ("timestamp", T.TimestampNTZType()),
+            ("timestamptz", T.TimestampType()),
+            ("string", T.StringType()),
+            ("uuid", T.StringType()),
+            ("fixed[8]", T.BinaryType()),
+            ("binary", T.BinaryType()),
+        ],
+    )
+    def test_primitive_to_spark(self, name, spark_type):
+        assert name in ALL_PRIMITIVES
+        assert ice_to_spark(parse_type(name)) == spark_type
+
+    @pytest.mark.parametrize(
+        "spark_type, name",
+        [
+            (T.BooleanType(), "boolean"),
+            (T.ByteType(), "int"),
+            (T.ShortType(), "int"),
+            (T.IntegerType(), "int"),
+            (T.LongType(), "long"),
+            (T.FloatType(), "float"),
+            (T.DoubleType(), "double"),
+            (T.DecimalType(10, 2), "decimal(10,2)"),
+            (T.DateType(), "date"),
+            (T.TimestampNTZType(), "timestamp"),
+            (T.TimestampType(), "timestamptz"),
+            (T.StringType(), "string"),
+            (T.BinaryType(), "binary"),
+        ],
+    )
+    def test_spark_to_primitive(self, spark_type, name):
+        assert spark_to_ice(spark_type) == IcePrimitive(name)
+
+    @pytest.mark.parametrize(
+        "spark_type",
+        [T.NullType(), T.DayTimeIntervalType(), T.YearMonthIntervalType(), T.CharType(4)],
+        ids=["null", "day_time_interval", "year_month_interval", "char"],
+    )
+    def test_unmapped_spark_type_rejected(self, spark_type):
+        with pytest.raises(ValueError, match="no Iceberg mapping"):
+            spark_to_ice(spark_type)
+
+    @pytest.mark.parametrize("required", [True, False])
+    def test_list_element_nullability(self, required):
+        t = IceList(element_id=1, element_required=required, element=IcePrimitive("int"))
+        assert ice_to_spark(t) == T.ArrayType(T.IntegerType(), containsNull=not required)
+
+    @pytest.mark.parametrize("required", [True, False])
+    def test_map_value_nullability(self, required):
+        t = IceMap(
+            key_id=1, key=IcePrimitive("string"),
+            value_id=2, value_required=required, value=IcePrimitive("double"),
+        )
+        assert ice_to_spark(t) == T.MapType(
+            T.StringType(), T.DoubleType(), valueContainsNull=not required
+        )
+
+    @pytest.mark.parametrize(
+        "name, marker",
+        [("time", "time"), ("uuid", "uuid"), ("fixed[4]", "fixed[4]"),
+         ("long", None), ("string", None)],
+    )
+    def test_gap_type_marker_in_field_metadata(self, name, marker):
+        # Spark has no time/uuid/fixed type: the struct field keeps the
+        # Iceberg name so the original type survives a Spark round trip.
+        st_ = ice_to_spark(IceStruct((IceField(7, "c", False, parse_type(name)),)))
+        assert st_["c"].metadata.get("iceberg.type") == marker
+        assert st_["c"].metadata["iceberg.id"] == 7
+
+    def test_doc_travels_as_comment_both_ways(self):
+        ice = IceStruct((IceField(1, "a", True, IcePrimitive("long"), doc="the key"),))
+        spark_st = ice_to_spark(ice)
+        assert spark_st["a"].metadata["comment"] == "the key"
+        assert not spark_st["a"].nullable
+        assert spark_to_ice(spark_st) == ice
+
+    def test_ids_assigned_top_down_then_depth_first(self):
+        st_ = T.StructType([
+            T.StructField("a", T.StructType([T.StructField("x", T.LongType())])),
+            T.StructField("b", T.ArrayType(T.StringType())),
+            T.StructField("c", T.MapType(T.StringType(), T.ArrayType(T.IntegerType()))),
+        ])
+        ice = spark_to_ice(st_)
+        a, b, c = ice.fields
+        # The three direct fields take ids 1-3 before any nested id.
+        assert (a.id, b.id, c.id) == (1, 2, 3)
+        assert a.type.fields[0].id == 4
+        assert b.type.element_id == 5
+        assert (c.type.key_id, c.type.value_id, c.type.value.element_id) == (6, 7, 8)
+        assert max_field_id(ice) == 8
+
+
+class TestPrimitiveParsing:
+    @pytest.mark.parametrize(
+        "raw, canonical",
+        [("decimal(10, 2)", "decimal(10,2)"), ("decimal(010,02)", "decimal(10,2)"),
+         ("fixed[008]", "fixed[8]"), ("decimal(38,38)", "decimal(38,38)")],
+    )
+    def test_parameterized_forms_canonicalised(self, raw, canonical):
+        assert type_to_json(parse_type(raw)) == canonical
+
+    @pytest.mark.parametrize(
+        "bad",
+        ["decimal(39,0)", "decimal(a,b)", "decimal", "decimal(10)",
+         "fixed[]", "fixed[-1]", "fixed"],
+    )
+    def test_malformed_parameterized_rejected(self, bad):
+        with pytest.raises(ValueError):
+            parse_type(bad)
+
+    @pytest.mark.parametrize("tag", ["union", None])
+    def test_unknown_nested_tag_rejected(self, tag):
+        with pytest.raises(ValueError, match="unknown nested type tag"):
+            parse_type({"type": tag})
+
+    @pytest.mark.parametrize("obj", [5, None, ["int"]], ids=["int", "none", "list"])
+    def test_non_json_type_rejected(self, obj):
+        with pytest.raises(ValueError, match="cannot parse type"):
+            parse_type(obj)
+
+    @pytest.mark.parametrize(
+        "name, precision_scale, length",
+        [("decimal(10,2)", (10, 2), None), ("fixed[16]", None, 16),
+         ("long", None, None), ("binary", None, None)],
+    )
+    def test_primitive_parameters(self, name, precision_scale, length):
+        p = parse_type(name)
+        assert p.decimal_precision_scale == precision_scale
+        assert p.fixed_length == length
+
+
+class TestMaxFieldId:
+    @pytest.mark.parametrize(
+        "t, expected",
+        [
+            (IcePrimitive("long"), 0),
+            (IceStruct(), 0),
+            (IceStruct((IceField(3, "a", True, IcePrimitive("int")),
+                        IceField(9, "b", True, IcePrimitive("int")))), 9),
+            (IceList(12, True, IcePrimitive("int")), 12),
+            (IceMap(2, IcePrimitive("string"), 3, False,
+                    IceStruct((IceField(40, "z", False, IcePrimitive("int")),))), 40),
+        ],
+        ids=["primitive", "empty_struct", "struct", "list", "map_nested_struct"],
+    )
+    def test_max_field_id(self, t, expected):
+        assert max_field_id(t) == expected
+
+
+class TestTransformParts:
+    @pytest.mark.parametrize(
+        "s, kind, param",
+        [("void", "void", None), ("identity", "identity", None), ("year", "year", None),
+         ("month", "month", None), ("day", "day", None), ("hour", "hour", None),
+         ("bucket[16]", "bucket", 16), ("truncate[4]", "truncate", 4)],
+    )
+    def test_kind_and_param(self, s, kind, param):
+        t = Transform.parse(s)
+        assert (t.kind, t.param) == (kind, param)
+
+    @pytest.mark.parametrize(
+        "bad", ["bucket[-1]", "Bucket[4]", "identity ", "truncate[4", "day[1]", "hours"]
+    )
+    def test_invalid_rejected(self, bad):
+        with pytest.raises(ValueError, match="invalid transform"):
+            Transform.parse(bad)
+
+    def test_bucket_width_canonicalised(self):
+        assert Transform.parse("bucket[007]").to_json() == "bucket[7]"
+
+    @pytest.mark.parametrize(
+        "transforms, unpartitioned",
+        [((), True), (("void",), True), (("void", "identity"), False), (("day",), False)],
+        ids=["no_fields", "void_only", "void_and_identity", "day"],
+    )
+    def test_is_unpartitioned(self, transforms, unpartitioned):
+        spec = PartitionSpec(
+            spec_id=0,
+            fields=tuple(
+                PartitionField(i + 1, 1000 + i, f"p{i}", Transform.parse(t))
+                for i, t in enumerate(transforms)
+            ),
+        )
+        assert spec.is_unpartitioned is unpartitioned
+
+    def test_field_with_bad_transform_rejected(self):
+        with pytest.raises(ValueError):
+            PartitionField.from_json(
+                {"source-id": 1, "field-id": 1000, "name": "p", "transform": "bucket"}
+            )
+
+
+_DIR_NULLS = [("asc", "nulls-first"), ("asc", "nulls-last"),
+              ("desc", "nulls-first"), ("desc", "nulls-last")]
+
+
+class TestSortFields:
+    def test_invalid_null_order_rejected(self):
+        with pytest.raises(ValueError, match="null order"):
+            SortField(1, Transform.parse("identity"), "asc", "nulls-middle")
+
+    @pytest.mark.parametrize("direction, null_order", _DIR_NULLS)
+    def test_round_trip(self, direction, null_order):
+        f = SortField(3, Transform.parse("truncate[2]"), direction, null_order)
+        assert SortField.from_json(f.to_json()) == f
+
+    @pytest.mark.parametrize(
+        "order_id, n_fields, unsorted", [(0, 1, True), (5, 0, True), (5, 1, False)]
+    )
+    def test_is_unsorted(self, order_id, n_fields, unsorted):
+        fields = (SortField(1, Transform.parse("identity"), "asc", "nulls-first"),) * n_fields
+        assert SortOrder(order_id=order_id, fields=fields).is_unsorted is unsorted
+
+    @pytest.mark.parametrize("direction, null_order", _DIR_NULLS)
+    def test_apply_orders_rows(self, spark, direction, null_order):
+        from pyspark.sql import functions as F
+
+        df = spark.createDataFrame([(2,), (None,), (1,), (3,)], "v int")
+        f = SortField(1, Transform.parse("identity"), direction, null_order)
+        got = [r.v for r in df.orderBy(f.apply(F.col("v"))).collect()]
+        values = sorted([1, 2, 3], reverse=direction == "desc")
+        expected = [None] + values if null_order == "nulls-first" else values + [None]
+        assert got == expected
+
+
+class TestSnapshotFields:
+    @pytest.mark.parametrize("op", ["append", "replace", "overwrite", "delete"])
+    def test_every_operation_accepted(self, op):
+        snap = Snapshot.from_json({
+            "snapshot-id": 1, "sequence-number": 0, "timestamp-ms": 0,
+            "manifest-list": "x", "summary": {"operation": op},
+        })
+        assert snap.operation == op
+
+    def test_missing_operation_is_none(self):
+        snap = Snapshot.from_json({
+            "snapshot-id": 1, "sequence-number": 0, "timestamp-ms": 0, "manifest-list": "x",
+        })
+        assert snap.operation is None and snap.summary == {}
+
+    def test_unset_optionals_omitted_from_json(self):
+        j = Snapshot(1, 0, 0, "x").to_json()
+        assert "parent-snapshot-id" not in j and "schema-id" not in j
+
+    def test_parent_round_trip(self):
+        snap = Snapshot(2, 1, 10, "y", parent_snapshot_id=1, summary={"operation": "delete"})
+        assert Snapshot.from_json(snap.to_json()) == snap
+
+    @pytest.mark.parametrize("bad", ["Branch", "head", ""])
+    def test_invalid_ref_type_rejected(self, bad):
+        with pytest.raises(ValueError, match="branch|tag"):
+            Reference(snapshot_id=1, type=bad)
+
+    def test_tag_with_snapshot_age_rejected(self):
+        with pytest.raises(ValueError):
+            Reference(snapshot_id=1, type="tag", max_snapshot_age_ms=1000)
+
+    def test_branch_json_omits_unset_retention(self):
+        assert Reference(snapshot_id=4, type="branch").to_json() == {
+            "snapshot-id": 4, "type": "branch",
+        }
+
+
+def _schema() -> IceSchema:
+    return IceSchema(
+        schema_id=3,
+        struct=IceStruct((
+            IceField(1, "id", True, IcePrimitive("long")),
+            IceField(2, "name", False, IcePrimitive("string"), doc="display name"),
+        )),
+        identifier_field_ids=(1,),
+        name_mapping=(NameMapping(1, ("id", "rid")), NameMapping(2, ("name",))),
+    )
+
+
+class TestSchema:
+    def test_name_mapping_round_trip(self):
+        m = NameMapping(field_id=5, names=("a", "alias_a"))
+        assert m.to_json() == {"field-id": 5, "names": ["a", "alias_a"]}
+        assert NameMapping.from_json(m.to_json()) == m
+
+    def test_round_trip_with_identifiers_and_mapping(self):
+        s = _schema()
+        j = s.to_json()
+        assert j["identifier-field-ids"] == [1]
+        assert IceSchema.from_json(j) == s
+
+    def test_unset_optionals_omitted_from_json(self):
+        j = IceSchema(schema_id=0, struct=IceStruct()).to_json()
+        assert j == {"type": "struct", "schema-id": 0, "fields": []}
+
+    def test_lookup_by_id_and_name(self):
+        s = _schema()
+        assert s.field_by_id(2).name == "name"
+        assert s.field_by_name("id").id == 1
+        assert s.column_names() == ["id", "name"]
+
+    @pytest.mark.parametrize("lookup", ["id", "name"])
+    def test_missing_field_is_none(self, lookup):
+        s = _schema()
+        assert (s.field_by_id(99) if lookup == "id" else s.field_by_name("nope")) is None
+
+    def test_to_spark_carries_field_ids(self):
+        sp = _schema().to_spark()
+        assert [f.metadata["iceberg.id"] for f in sp.fields] == [1, 2]
+        assert not sp["id"].nullable and sp["name"].nullable
+
+
+def _md_with_history() -> TableMetadata:
+    base = TableMetadata.from_json_str(FULL_METADATA_JSON)
+    snaps = (
+        Snapshot(11, 1, 1000, "m1", summary={"operation": "append"}),
+        Snapshot(12, 2, 2000, "m2", parent_snapshot_id=11, summary={"operation": "overwrite"}),
+    )
+    return base.evolve(
+        snapshots=snaps,
+        current_snapshot_id=12,
+        snapshot_log=(SnapshotLogEntry(11, 1000), SnapshotLogEntry(12, 2000)),
+        refs={"v1": Reference(snapshot_id=11, type="tag")},
+    )
+
+
+class TestTableAccessors:
+    @pytest.mark.parametrize(
+        "ts, snapshot_id",
+        [(1000, 11), (1500, 11), (2000, 12), (10**12, 12)],
+        ids=["at_first", "between", "at_second", "after_last"],
+    )
+    def test_snapshot_as_of(self, ts, snapshot_id):
+        assert _md_with_history().snapshot_as_of(ts).snapshot_id == snapshot_id
+
+    def test_snapshot_as_of_before_history_raises(self):
+        with pytest.raises(KeyError):
+            _md_with_history().snapshot_as_of(999)
+
+    def test_unknown_snapshot_id_raises(self):
+        with pytest.raises(KeyError):
+            _md_with_history().snapshot_by_id(13)
+
+    def test_main_defaults_to_current_snapshot(self):
+        main = _md_with_history().ref("main")
+        assert (main.snapshot_id, main.type) == (12, "branch")
+
+    def test_explicit_main_ref_wins(self):
+        md = _md_with_history()
+        md = md.evolve(refs={**md.refs, "main": Reference(snapshot_id=11, type="branch")})
+        assert md.ref("main").snapshot_id == 11
+
+    def test_named_tag(self):
+        assert _md_with_history().ref("v1") == Reference(snapshot_id=11, type="tag")
+
+    def test_unknown_ref_raises(self):
+        with pytest.raises(KeyError):
+            _md_with_history().ref("dev")
+
+    def test_main_without_snapshots_raises(self):
+        with pytest.raises(KeyError, match="no snapshots"):
+            TableMetadata.from_json_str(FULL_METADATA_JSON).ref("main")
+
+    @pytest.mark.parametrize(
+        "change, accessor",
+        [({"current_schema_id": 7}, "current_schema"),
+         ({"default_spec_id": 7}, "default_spec"),
+         ({}, "default_sort_order")],
+        ids=["schema", "spec", "sort_order"],
+    )
+    def test_dangling_default_id_raises(self, change, accessor):
+        # The fixture lists no sort orders, so its default order id 0
+        # already dangles.
+        md = TableMetadata.from_json_str(FULL_METADATA_JSON).evolve(**change)
+        with pytest.raises(KeyError):
+            getattr(md, accessor)()
+
+    def test_evolve_leaves_original_unchanged(self):
+        md = TableMetadata.from_json_str(FULL_METADATA_JSON)
+        md2 = md.evolve(last_sequence_number=9)
+        assert (md.last_sequence_number, md2.last_sequence_number) == (1, 9)
+
+    def test_history_round_trip(self):
+        md = _md_with_history()
+        assert md.to_json()["current-snapshot-id"] == 12
+        assert TableMetadata.from_json(md.to_json()) == md
+
+    def test_no_current_snapshot_omitted_from_json(self):
+        md = TableMetadata.from_json_str(FULL_METADATA_JSON)
+        assert "current-snapshot-id" not in md.to_json()
+
+    @pytest.mark.parametrize("fv", [None, 3, "2"], ids=["missing", "v3", "string"])
+    def test_other_format_versions_rejected(self, fv):
+        bad = json.loads(FULL_METADATA_JSON)
+        if fv is None:
+            del bad["format-version"]
+        else:
+            bad["format-version"] = fv
+        with pytest.raises(ValueError, match="format-version"):
+            TableMetadata.from_json(bad)
+
+    def test_property_values_coerced_to_strings(self):
+        doc = json.loads(FULL_METADATA_JSON)
+        doc["properties"] = {"write.target-file-size-bytes": 1024, "flag": True}
+        md = TableMetadata.from_json(doc)
+        assert md.properties == {"write.target-file-size-bytes": "1024", "flag": "True"}
+
+    def test_optional_sections_default_empty(self):
+        doc = json.loads(FULL_METADATA_JSON)
+        for key in ("properties", "metadata-log", "sort-orders", "default-sort-order-id"):
+            del doc[key]
+        md = TableMetadata.from_json(doc)
+        assert md.properties == {} and md.metadata_log == () and md.sort_orders == ()
+        assert md.default_sort_order_id == 0
+        assert md.snapshots == () and md.snapshot_log == () and md.refs == {}
