@@ -23,7 +23,12 @@ Storage layout (local FS here; any Hadoop-compatible FS at scale):
       metadata/vN.metadata.json     # the v2 document the model parses
       metadata/version-hint.text    # latest N (fast lookup)
       metadata/snap-<id>.json       # manifest: data files + stats
-      data/<commit-uuid>/[p=v/...]/part-*.parquet
+      data/<commit-uuid>/[__icelake_p<field-id>=v/...]/part-*.parquet
+
+Every data file keeps all of its schema's columns, identity-partition
+sources included; partition values live in the manifest. The
+``__icelake_p<field-id>`` directories are write-side names only —
+reads never parse them.
 
 Scale posture: the query path is metadata-driven — predicates are
 evaluated against partition values and per-file min/max stats *before*
@@ -62,6 +67,7 @@ from urllib.parse import unquote
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from iceberg_rs_spark.functions.transforms import transform_column
 from iceberg_rs_spark.model import (
@@ -148,12 +154,42 @@ class DataFileEntry:
         )
 
 
-#: internal row-position / sequence column names for the merge-on-read
-#: delete read path
+#: internal column names for the merge-on-read delete read path: a
+#: row's file URI and position, the path → sequence map of the data
+#: files (``_apply_equality_deletes``), and a delete row's sequence
 _POS_FP = "__icelake_file_path"
 _POS_IDX = "__icelake_pos"
 _SEQ = "__icelake_seq"
 _DEL_SEQ = "__icelake_del_seq"
+_METADATA_FIELDS = {_POS_FP: "_metadata.file_path", _POS_IDX: "_metadata.row_index"}
+
+
+def _meta_select(cols: "list[str] | tuple[str, ...]") -> "list[Column]":
+    """Spark's per-file metadata fields under their internal names."""
+    return [F.col(_METADATA_FIELDS[c]).alias(c) for c in cols]
+
+
+def _seq_lookup(entries: "list[DataFileEntry]") -> Column:
+    """path → data sequence number of ``entries``, one map literal
+    built on the driver: no Spark job, no join."""
+    seq = {os.path.abspath(e.path): int(e.sequence_number or 0) for e in entries}
+    return F.create_map(*[F.lit(x) for kv in seq.items() for x in kv])
+
+
+def _seq_of(lookup: Column, uri: Column) -> Column:
+    """Sequence number of the file at ``_metadata.file_path`` ``uri``.
+    That field is a Hadoop URI (``file:/``, space as ``%20``, ``%`` as
+    ``%25``, ``+`` and ``=`` literal), so it is normalised JVM-side —
+    ``+`` protected from url_decode's form decoding — rather than
+    re-encoding paths in Python. A miss fails the query instead of
+    silently keeping deleted rows."""
+    plain = F.regexp_replace(
+        F.url_decode(F.replace(uri, F.lit("+"), F.lit("%2B"))), "^file:(//)?", ""
+    )
+    return F.coalesce(
+        lookup[plain],
+        F.raise_error(F.concat(F.lit("no sequence number for file "), uri)),
+    )
 
 
 def _data_entries(entries: "list[DataFileEntry]") -> "list[DataFileEntry]":
@@ -235,11 +271,11 @@ class Catalog:
             suffix = {"identity": ""}.get(transform.kind, f"_{transform.kind}")
             pf_name = f"{col}{suffix}"
             if pf_name in by_name and pf_name != col:
-                # _write_data_files materializes the transform under
-                # this name via withColumn — a collision with a real
-                # data column would silently overwrite the user's data
-                # with transform values. Real Iceberg rejects
-                # conflicting partition names; so do we.
+                # Manifests and the files()/partitions() tables key
+                # partition values by this name; one name must not
+                # mean both a data column and a transform of another.
+                # Real Iceberg rejects conflicting partition names; so
+                # do we.
                 raise ValueError(
                     f"partition field name {pf_name!r} (from {col!r} "
                     f"{transform.kind}) collides with a schema column; "
@@ -550,12 +586,14 @@ class Table:
 
     def _commit(self, updater) -> TableMetadata:
         """Optimistic commit loop honoring commit.retry.num-retries
-        (the property the reference's fixture pins, table.rs:148-150)."""
-        md0 = self.metadata
-        retries = int(md0.properties.get("commit.retry.num-retries", "4"))
-        for _ in range(retries + 1):
+        (the property the reference's fixture pins, table.rs:148-150).
+        Each attempt parses the latest metadata once and takes the
+        retry budget from that parse."""
+        failures = 0
+        while True:
             v = _latest_version(self.location)
             md = TableMetadata.from_json_str(open(_version_path(self.location, v)).read())
+            retries = int(md.properties.get("commit.retry.num-retries", "4"))
             new_md = updater(md)
             new_md = new_md.evolve(
                 last_updated_ms=_now_ms(),
@@ -566,10 +604,11 @@ class Table:
                 _write_metadata_version(self.location, v + 1, new_md)
                 return new_md
             except FileExistsError:
-                continue
-        raise CommitConflict(
-            f"commit to {self.identifier} failed after {retries} retries"
-        )
+                failures += 1
+                if failures > retries:
+                    raise CommitConflict(
+                        f"commit to {self.identifier} failed after {retries} retries"
+                    ) from None
 
     # -- manifests -----------------------------------------------------
 
@@ -669,6 +708,10 @@ class Table:
         return df.select(*cols)
 
     def _partition_exprs(self, md: TableMetadata) -> list[tuple[str, Column]]:
+        """(alias, transform) per spec field. Writers partition by the
+        reserved alias, never by a source column, so Spark's
+        ``partitionBy`` strips only the alias and every source column
+        stays inside the data file."""
         schema = md.current_schema()
         out = []
         for pf in md.default_spec().fields:
@@ -676,7 +719,12 @@ class Table:
                 continue
             src = schema.field_by_id(pf.source_id)
             is_string = isinstance(src.type, IcePrimitive) and src.type.name == "string"
-            out.append((pf.name, transform_column(pf.transform, src.name, is_string=is_string)))
+            out.append(
+                (
+                    _partition_alias(pf),
+                    transform_column(pf.transform, src.name, is_string=is_string),
+                )
+            )
         return out
 
     def _write_data_files(self, df: DataFrame, md: TableMetadata) -> list[DataFileEntry]:
@@ -713,20 +761,37 @@ class Table:
             writer = writer.partitionBy(*pnames)
         writer.parquet(commit_dir)
 
-        return self._collect_entries(commit_dir, md, pnames)
+        return self._collect_files(commit_dir, md)
 
-    def _collect_entries(
-        self, commit_dir: str, md: TableMetadata, pnames: list[str]
+    def _collect_files(
+        self,
+        out_dir: str,
+        md: TableMetadata,
+        content: str = "data",
+        equality_ids: tuple = (),
     ) -> list[DataFileEntry]:
+        """One manifest entry per parquet file a Spark write left under
+        ``out_dir``. Partition directories are named by spec-field
+        alias (``_partition_exprs``); they map back to the spec field
+        name here, so manifests key partition values by ``pf.name``.
+        Data files record column stats. Delete files record none and
+        skip zero-row outputs, which delete nothing."""
+        names = {_partition_alias(pf): pf.name for pf in md.default_spec().fields}
         entries = []
-        for root, _dirs, files in os.walk(commit_dir):
+        for root, _dirs, files in os.walk(out_dir):
+            partition = {}
+            for seg in os.path.relpath(root, out_dir).split(os.sep):
+                if "=" in seg:
+                    alias, v = seg.split("=", 1)
+                    v = unquote(v)
+                    partition[names[alias]] = None if v == _HIVE_NULL else v
             for name in files:
                 if not name.endswith(".parquet"):
                     continue
                 path = os.path.join(root, name)
-                partition = _partition_values_from_path(os.path.relpath(root, commit_dir))
                 pf = pq.ParquetFile(path)
-                stats = _file_stats(pf)
+                if content != "data" and pf.metadata.num_rows == 0:
+                    continue
                 entries.append(
                     DataFileEntry(
                         path=path,
@@ -735,7 +800,9 @@ class Table:
                         schema_id=md.current_schema_id,
                         spec_id=md.default_spec_id,
                         partition=partition,
-                        stats=stats,
+                        stats=_file_stats(pf) if content == "data" else {},
+                        content=content,
+                        equality_ids=equality_ids,
                     )
                 )
         return entries
@@ -1065,27 +1132,7 @@ class Table:
         )
         delete_dir = os.path.join(self.location, "deletes", uuid.uuid4().hex[:16])
         matches.write.parquet(delete_dir)
-        new_dels: list[DataFileEntry] = []
-        for root, _dirs, files in os.walk(delete_dir):
-            for name in files:
-                if not name.endswith(".parquet"):
-                    continue
-                path = os.path.join(root, name)
-                pf = pq.ParquetFile(path)
-                if pf.metadata.num_rows == 0:
-                    continue
-                new_dels.append(
-                    DataFileEntry(
-                        path=path,
-                        record_count=pf.metadata.num_rows,
-                        file_size_bytes=os.path.getsize(path),
-                        schema_id=md.current_schema_id,
-                        spec_id=md.default_spec_id,
-                        partition={},
-                        stats={},
-                        content="position-deletes",
-                    )
-                )
+        new_dels = self._collect_files(delete_dir, md, content="position-deletes")
         deleted = sum(e.record_count for e in new_dels)
         if deleted == 0:
             return 0
@@ -1238,41 +1285,18 @@ class Table:
                     isinstance(sf.type, IcePrimitive) and sf.type.name == "string"
                 )
                 out = out.withColumn(
-                    pf.name,
+                    _partition_alias(pf),
                     transform_column(pf.transform, f"k{sf.id}", is_string=is_string),
                 )
-                pnames.append(pf.name)
+                pnames.append(_partition_alias(pf))
             out.repartition(*[F.col(n) for n in pnames]).write.partitionBy(
                 *pnames
             ).parquet(delete_dir)
         else:
             keys.write.parquet(delete_dir)
-        eq_entries: list[DataFileEntry] = []
-        for root, _dirs, files in os.walk(delete_dir):
-            for name in files:
-                if not name.endswith(".parquet"):
-                    continue
-                path = os.path.join(root, name)
-                pf = pq.ParquetFile(path)
-                if pf.metadata.num_rows == 0:
-                    continue
-                eq_entries.append(
-                    DataFileEntry(
-                        path=path,
-                        record_count=pf.metadata.num_rows,
-                        file_size_bytes=os.path.getsize(path),
-                        schema_id=md.current_schema_id,
-                        spec_id=md.default_spec_id,
-                        partition=_partition_values_from_path(
-                            os.path.relpath(root, delete_dir)
-                        )
-                        if scoped
-                        else {},
-                        stats={},
-                        content="equality-deletes",
-                        equality_ids=tuple(fids),
-                    )
-                )
+        eq_entries = self._collect_files(
+            delete_dir, md, content="equality-deletes", equality_ids=tuple(fids)
+        )
 
         def updater(cur: TableMetadata) -> TableMetadata:
             # Equality deletes COMMUTE with concurrent appends, other
@@ -1517,11 +1541,6 @@ class Table:
 
     # -- read path -----------------------------------------------------
 
-    def _read_entries(self, md: TableMetadata, entries: list[DataFileEntry]) -> DataFrame:
-        """Read a set of manifest entries, reconciling schema
-        generations by field id (schema-evolution read path)."""
-        return self._read_entries_as(md, entries, md.current_schema())
-
     def count_rows(self, branch: str = MAIN_BRANCH) -> int:
         """Exact row count served from manifest statistics — the
         metadata-only COUNT(*) every Iceberg implementation answers
@@ -1623,28 +1642,24 @@ class Table:
     ) -> DataFrame:
         """Read manifest entries projected to ``target``.
 
-        Files are grouped by (schema generation, commit basePath): an
-        identity-partitioned source column is physically absent from
-        the data file (the writer's partitionBy moves it into the
-        directory name), so reads must hand Spark the commit directory
-        as basePath and let partition discovery restore the column,
-        cast to its schema-declared type. One read group per (schema,
-        commit) — not per partition — keeps the plan size independent
-        of partition count.
+        One Spark read per schema generation: a managed data file holds
+        every column of the schema it was written under, so all files
+        of one generation read in one call with that schema, and
+        ``_project_by_field_id`` maps older generations onto
+        ``target``. Leaf-file reads discover no partition columns.
+        Files registered by ``add_files`` read one directory at a
+        time: their physical schemas may differ, and a schema-less
+        read takes its schema from a single footer.
 
         ``delete_entries`` are applied merge-on-read — the v2 read
         path that avoids rewriting 100 TB to delete a slice:
 
         * position deletes (content="position-deletes"): every row
-          carries its ``_metadata.file_path``/``row_index`` and
-          deleted positions are removed with one anti-join.
-        * equality deletes (content="equality-deletes"): key tuples
-          (columns ``k<field_id>`` — field ids, not names, so renames
-          never detach them) anti-join on null-safe key equality AND
-          ``row sequence < delete sequence``, so an upsert's own new
-          rows (same sequence as its delete file) survive while every
-          older version of the key dies. AQE broadcasts the delete
-          side when small — the common case for CDC batches.
+          carries its ``_metadata.file_path``/``row_index``; all
+          position-delete files read in one call and deleted positions
+          are removed with one anti-join.
+        * equality deletes (content="equality-deletes"): see
+          ``_apply_equality_deletes``.
 
         ``with_pos`` keeps the position columns (_POS_FP/_POS_IDX) in
         the output, which is how the delete WRITER computes positions.
@@ -1652,50 +1667,27 @@ class Table:
         pos_dels = [e for e in (delete_entries or []) if e.content == "position-deletes"]
         eq_dels = [e for e in (delete_entries or []) if e.content == "equality-deletes"]
         need_pos = with_pos or bool(pos_dels)
-        # Row sequence numbers ride along as a per-read-group LITERAL
-        # (a commit is one sequence, so this doesn't fragment groups) —
-        # no join against manifest paths, no file-URI normalization.
-        need_seq = bool(eq_dels)
-        pos_cols = [_POS_FP, _POS_IDX] if need_pos else []
+        # Equality deletes need each row's file too: its sequence
+        # number is looked up by path.
+        meta_cols = [_POS_FP, _POS_IDX] if need_pos else [_POS_FP] if eq_dels else []
         if not entries:
-            df = self.spark.createDataFrame([], target.to_spark())
-            for c in pos_cols:
-                df = df.withColumn(
-                    c, F.lit(None).cast("string" if c == _POS_FP else "long")
-                )
-            if need_seq:
-                df = df.withColumn(_SEQ, F.lit(None).cast("long"))
-            return df
-        groups: dict[tuple[int, str, int], list[str]] = {}
+            return self.spark.createDataFrame([], target.to_spark())
+        groups: dict[tuple[int, str], list[str]] = {}
         for e in entries:
+            raw = e.schema_id == RAW_SCHEMA_ID
             groups.setdefault(
-                (
-                    e.schema_id,
-                    _base_path(e.path, self.location),
-                    int(e.sequence_number or 0),
-                ),
-                [],
+                (e.schema_id, os.path.dirname(e.path) if raw else ""), []
             ).append(e.path)
         parts = []
-        for (sid, base, seq), paths in sorted(groups.items()):
+        for (sid, _dir), paths in sorted(groups.items()):
             if sid == RAW_SCHEMA_ID:
-                df = self._read_raw_via_name_mapping(md, paths, target, pos_cols)
-            else:
-                file_schema = md.schema_by_id(sid)
-                df = (
-                    self.spark.read.option("basePath", base)
-                    .schema(file_schema.to_spark())
-                    .parquet(*paths)
-                )
-                if need_pos:
-                    df = df.withColumn(
-                        _POS_FP, F.col("_metadata.file_path")
-                    ).withColumn(_POS_IDX, F.col("_metadata.row_index"))
-                df = df.select(*[f.name for f in file_schema.fields], *pos_cols)
-                if sid != target.schema_id:
-                    df = _project_by_field_id(df, file_schema, target, extra=pos_cols)
-            if need_seq:
-                df = df.withColumn(_SEQ, F.lit(seq))
+                parts.append(self._read_raw_via_name_mapping(md, paths, target, meta_cols))
+                continue
+            file_schema = md.schema_by_id(sid)
+            df = self.spark.read.schema(file_schema.to_spark()).parquet(*paths)
+            df = df.select(*[f.name for f in file_schema.fields], *_meta_select(meta_cols))
+            if sid != target.schema_id:
+                df = _project_by_field_id(df, file_schema, target, extra=meta_cols)
             parts.append(df)
         out = parts[0]
         for p in parts[1:]:
@@ -1709,9 +1701,11 @@ class Table:
             )
             out = out.join(dels, [_POS_FP, _POS_IDX], "left_anti")
         if eq_dels:
-            out = self._apply_equality_deletes(out, eq_dels, target)
-        if not with_pos and need_pos:
-            out = out.drop(*pos_cols)
+            out = self._apply_equality_deletes(
+                out.withColumn(_SEQ, _seq_lookup(entries)), eq_dels, target
+            )
+        if not with_pos:
+            out = out.drop(*meta_cols)
         return out
 
     def _apply_equality_deletes(
@@ -1722,40 +1716,51 @@ class Table:
     ) -> DataFrame:
         """Anti-join equality-delete key tuples against the scan.
 
-        A delete row kills a data row when every key column matches
-        null-safely AND the data row's sequence number (the _SEQ
-        read-group literal) is strictly smaller than the delete
+        Key tuples sit in columns ``k<field_id>`` — field ids, not
+        names, so renames never detach them. All delete files that
+        share ``equality_ids`` read in one call. A delete row kills a
+        data row when every key column matches null-safely AND the
+        data row's sequence number is strictly smaller than the delete
         file's — Iceberg v2's ordering rule (an upsert commits its new
         rows and their delete in one snapshot; same sequence → the new
-        rows survive).
+        rows survive). AQE broadcasts the delete side when small — the
+        common case for CDC batches.
+
+        ``out`` carries ``_SEQ``, the path → sequence map literal of
+        its data files (``_seq_lookup``), and each row's file URI in
+        ``_POS_FP``. The optimizer folds the literal into the join
+        condition and prunes the column, so only rows whose key
+        matches a delete row pay for the lookup.
         """
         by_ids: dict[tuple, list[DataFileEntry]] = {}
         for e in eq_dels:
             by_ids.setdefault(tuple(e.equality_ids), []).append(e)
-        name_by_fid = {f.id: f.name for f in target.fields}
+        field_by_id = {f.id: f for f in target.fields}
         for fids, ents in sorted(by_ids.items()):
-            missing = [fid for fid in fids if fid not in name_by_fid]
+            missing = [fid for fid in fids if fid not in field_by_id]
             if missing:
                 raise ValueError(
                     f"equality-delete key field id(s) {missing} not in the "
                     "read schema; identifier columns cannot be dropped while "
                     "equality deletes reference them"
                 )
-            parts = []
-            for e in ents:
-                parts.append(
-                    self.spark.read.parquet(e.path).withColumn(
-                        _DEL_SEQ, F.lit(int(e.sequence_number or 0))
-                    )
+            # Read with the target's types: a key written before a type
+            # promotion (int → long) widens on read.
+            key_schema = T.StructType(
+                [T.StructField(f"k{fid}", _spark_type_of(field_by_id[fid])) for fid in fids]
+            )
+            dels = (
+                self.spark.read.schema(key_schema)
+                .parquet(*[e.path for e in ents])
+                .withColumn(
+                    _DEL_SEQ, _seq_of(_seq_lookup(ents), F.col("_metadata.file_path"))
                 )
-            dels = parts[0]
-            for p in parts[1:]:
-                dels = dels.unionByName(p)
+            )
             # DataFrame-qualified references: a data column literally
             # named "k<fid>" must not capture the delete side's key.
-            cond = out[_SEQ] < dels[_DEL_SEQ]
+            cond = _seq_of(out[_SEQ], out[_POS_FP]) < dels[_DEL_SEQ]
             for fid in fids:
-                cond = cond & out[name_by_fid[fid]].eqNullSafe(dels[f"k{fid}"])
+                cond = cond & out[field_by_id[fid].name].eqNullSafe(dels[f"k{fid}"])
             out = out.join(dels, cond, "left_anti")
         return out.drop(_SEQ)
 
@@ -1764,7 +1769,7 @@ class Table:
         md: TableMetadata,
         paths: list[str],
         target: IceSchema,
-        pos_cols: list[str] | tuple[str, ...] = (),
+        meta_cols: list[str] | tuple[str, ...] = (),
     ) -> DataFrame:
         """Read add_files-registered (field-id-less) parquet through the
         name mapping: file column name → field id → target field."""
@@ -1775,10 +1780,6 @@ class Table:
                 "schema.name-mapping.default property"
             )
         raw = self.spark.read.parquet(*paths)
-        if pos_cols:
-            raw = raw.withColumn(_POS_FP, F.col("_metadata.file_path")).withColumn(
-                _POS_IDX, F.col("_metadata.row_index")
-            )
         file_cols = set(raw.columns)
         by_field_id = {m.field_id: m for m in mapping}
         cols = []
@@ -1790,7 +1791,7 @@ class Table:
                 cols.append(F.lit(None).cast(spark_t).alias(f.name))
             else:
                 cols.append(F.col(src).cast(spark_t).alias(f.name))
-        return raw.select(*cols, *pos_cols)
+        return raw.select(*cols, *_meta_select(meta_cols))
 
     def _resolve_snapshot(
         self,
@@ -1842,9 +1843,7 @@ class Table:
             if cur.field_by_name(name):
                 raise ValueError(f"column already exists: {name}")
             # Reverse of the create_table collision rule: a new data
-            # column must not shadow a derived partition-field name
-            # (the write path materializes that name via withColumn,
-            # which would overwrite the new column's data).
+            # column must not shadow a derived partition-field name.
             md = self.metadata
             for spec in md.partition_specs:
                 for pf in spec.fields:
@@ -2779,6 +2778,11 @@ def _project_by_field_id(
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
+def _partition_alias(pf: PartitionField) -> str:
+    """Write-side column and directory name of a partition field."""
+    return f"__icelake_p{pf.field_id}"
+
+
 def _load_name_mapping(md: TableMetadata) -> tuple[NameMapping, ...] | None:
     """Name mapping from the schema.name-mapping.default property,
     falling back to the current schema's inline mapping."""
@@ -2874,34 +2878,6 @@ def _strip_file_scheme(uri: str) -> str:
     return uri
 
 
-def _base_path(path: str, location: str | None = None) -> str:
-    """Commit directory of a data file, anchored at the table's known
-    ``{location}/data/{commit}`` layout. Never inferred by scanning the
-    path for ``k=v`` segments: a warehouse/table directory legally named
-    ``x=y`` (POSIX allows '=') would push the basePath above the table
-    root and make Spark partition discovery error or invent partition
-    columns for every read. Files outside the managed layout
-    (add_files-registered raw files, read without basePath) group by
-    their own dirname."""
-    if location is not None:
-        data_root = os.path.join(location, "data")
-        rel = os.path.relpath(path, data_root)
-        if not rel.startswith(".."):
-            commit = rel.split(os.sep)[0]
-            return os.path.join(data_root, commit)
-    return os.path.dirname(path)
-
-
-def _partition_values_from_path(rel: str) -> dict:
-    out = {}
-    for seg in rel.split(os.sep):
-        if "=" in seg:
-            k, v = seg.split("=", 1)
-            v = unquote(v)
-            out[k] = None if v == _HIVE_NULL else v
-    return out
-
-
 def _json_safe(v):
     if isinstance(v, bytes):
         return None  # no stats for binary
@@ -2920,7 +2896,6 @@ def _file_stats(pf: pq.ParquetFile) -> dict:
     the manifest format doesn't change.
     """
     md = pf.metadata
-    arrow_schema = pf.schema_arrow
     stats: dict[str, dict] = {}
     # Columns where ANY row group lacks min/max: the file-level interval
     # is unknown — taking it from only the stats-bearing groups would
@@ -2964,7 +2939,6 @@ def _file_stats(pf: pq.ParquetFile) -> dict:
         stats[name]["min"] = stats[name]["max"] = None
     for name in unknown_nulls:
         stats[name]["nulls"] = None
-    _ = arrow_schema
     return stats
 
 

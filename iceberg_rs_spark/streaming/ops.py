@@ -31,8 +31,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical rows). The watermark column is `ts`."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # glob, not the bare file path: FileStreamSource derives basePath
-    # from the non-glob prefix, and basePath must be a directory
+    # glob, not the bare file path: FileStreamSource takes its base
+    # directory from the non-glob prefix, and that must be a directory
     raw = spark.readStream.schema(schema).parquet(f"{sf_dir}/events.*")
     return normalize_events_ts(raw)
 

@@ -1018,8 +1018,9 @@ class TestAdviceR2Fixes:
 
     def test_base_path_safe_with_equals_in_warehouse_dir(self, spark, tmp_path, events_df):
         """A warehouse path whose directory names contain '=' (legal on
-        POSIX) must not confuse basePath anchoring — partition discovery
-        restores identity-partition columns correctly."""
+        POSIX) must not leak into reads: data files keep the
+        identity-partition column, and leaf-file reads discover no
+        partition columns from the path."""
         wh = tmp_path / "env=prod" / "wh"
         cat = Catalog(spark, str(wh))
         t = cat.create_table(
@@ -1745,6 +1746,26 @@ class TestEqualityDeleteUpserts:
         assert any(r.content == "equality-deletes" for r in files)
         assert mor.metadata.snapshots[-1].operation == "overwrite"
 
+    def test_delete_files_across_key_type_promotion(self, catalog, spark):
+        """Equality-delete files written before and after the key
+        widens from int to long read together, as long keys."""
+        df = spark.createDataFrame([(i, float(i)) for i in range(10)], "k int, v double")
+        t = catalog.create_table("db.eqwiden", df.schema)
+        t.append(df)
+        t.merge(
+            spark.createDataFrame([(1, 10.0), (2, 20.0)], "k int, v double"),
+            on=["k"],
+            mode="merge-on-read",
+        )
+        t.update_column_type("k", "long")
+        t.merge(
+            spark.createDataFrame([(2, 200.0), (3, 300.0)], "k long, v double"),
+            on=["k"],
+            mode="merge-on-read",
+        )
+        want = {**{i: float(i) for i in range(10)}, 1: 10.0, 2: 200.0, 3: 300.0}
+        assert sorted(tuple(r) for r in t.scan().collect()) == sorted(want.items())
+
     def test_own_batch_survives_and_old_versions_die(self, catalog, spark, events_df):
         base = events_df.limit(50)
         t = catalog.create_table("db.eqseq", base.schema)
@@ -1972,6 +1993,118 @@ class TestEqualityDeleteUpserts:
             == 0
         )
         base.unpersist()
+
+
+class TestPartitionSourceColumnsInDataFiles:
+    """Data files keep every source column, identity-partitioned ones
+    included (partition values are manifest metadata, as in Iceberg's
+    hidden partitioning). Reads therefore need no partition discovery:
+    one Spark read per schema generation, whatever the history."""
+
+    _SCHEMA = "id long, ts timestamp, s string, v double"
+
+    @staticmethod
+    def _rows(spark, rows):
+        return spark.createDataFrame(
+            rows, TestPartitionSourceColumnsInDataFiles._SCHEMA
+        )
+
+    @staticmethod
+    def _snapshot(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    def test_identity_partitioned_empty_string_reads_back(self, catalog, spark):
+        """'' is a value, not NULL: it must survive the round trip even
+        though Spark's writer names its directory the default
+        partition."""
+        df = spark.createDataFrame([(1, ""), (2, None), (3, "a")], "id long, s string")
+        t = catalog.create_table("db.emptystr", df.schema, partition_by=[("s", "identity")])
+        t.append(df)
+        assert sorted(tuple(r) for r in t.scan().collect()) == [
+            (1, ""), (2, None), (3, "a")
+        ]
+        assert [tuple(r) for r in t.scan(where="s = ''").collect()] == [(1, "")]
+
+    def test_scan_read_calls_flat_in_history(self, catalog, spark, monkeypatch):
+        """A scan over a delete-laden day(ts) table makes at most three
+        DataFrameReader.parquet calls — data, position deletes,
+        equality deletes — at 4 commits and at 16."""
+        from pyspark.sql.readwriter import DataFrameReader
+
+        t = catalog.create_table(
+            "db.readcalls",
+            self._rows(spark, []).schema,
+            partition_by=[("ts", "day")],
+        )
+        day = lambda i: dt.datetime(2024, 1, 1 + i % 4, i % 24)  # noqa: E731
+        t.append(self._rows(spark, [(i, day(i), f"s{i}", float(i)) for i in range(40)]))
+        commits = 1
+        calls: list[int] = []
+        orig = DataFrameReader.parquet
+
+        def counting(self, *paths, **kw):
+            calls.append(len(paths))
+            return orig(self, *paths, **kw)
+
+        for upto in (4, 16):
+            while commits < upto:
+                if commits % 2:
+                    ids = range(commits, 40, 9)
+                    t.merge(
+                        self._rows(
+                            spark,
+                            [(i, day(i + commits), f"u{commits}", float(commits)) for i in ids],
+                        ),
+                        on=["id"],
+                        mode="merge-on-read",
+                    )
+                else:
+                    t.delete(f"id = {commits}", mode="merge-on-read")
+                commits += 1
+            monkeypatch.setattr(DataFrameReader, "parquet", counting)
+            calls.clear()
+            df = t.scan()
+            monkeypatch.undo()
+            assert len(calls) <= 3, (upto, calls)
+            assert df.count() == 40 - (upto - 1) // 2  # one delete per even commit
+
+    def test_special_characters_in_paths_and_partition_values(
+        self, spark, tmp_path
+    ):
+        """Warehouse path and identity partition values with a space,
+        '%', '+', '=' and non-ASCII characters: append, MOR upsert, MOR
+        delete, time travel and compact agree with a dict replay."""
+        cat = Catalog(spark, str(tmp_path / "w h=x+y%zé"))
+        t = cat.create_table(
+            "db.special",
+            self._rows(spark, []).schema,
+            partition_by=[("s", "identity"), ("ts", "day")],
+        )
+        vals = ["a b:c", "p+q%r", "k=v", "ü/é", None, ""]
+        ts = lambda i: dt.datetime(2024, 3, 1 + i % 2, 12)  # noqa: E731
+        state = {i: (i, ts(i), vals[i % 6], float(i)) for i in range(24)}
+        t.append(self._rows(spark, list(state.values())))
+        snaps = [(t.metadata.current_snapshot_id, dict(state))]
+        for c in range(1, 3):
+            up = [(i, ts(i + c), vals[(i + c) % 6], 100.0 * c + i) for i in range(c, 24, 5)]
+            t.merge(self._rows(spark, up), on=["id"], mode="merge-on-read")
+            state.update((r[0], r) for r in up)
+            dead = [i for i, r in state.items() if r[2] == vals[c]][:2]
+            where = " OR ".join(f"id = {i}" for i in dead)
+            assert t.delete(where, mode="merge-on-read") == len(dead)
+            for i in dead:
+                del state[i]
+            snaps.append((t.metadata.current_snapshot_id, dict(state)))
+            assert self._snapshot(t.scan()) == sorted(state.values(), key=repr)
+        for sid, want in snaps:
+            got = self._snapshot(t.scan(snapshot_id=sid))
+            assert got == sorted(want.values(), key=repr)
+        for v in vals[:4]:
+            got = self._snapshot(t.scan(where=f"s = '{v}'"))
+            assert got == sorted((r for r in state.values() if r[2] == v), key=repr)
+        t.compact()
+        assert self._snapshot(t.scan()) == sorted(state.values(), key=repr)
+        assert not t.files().where("content != 'data'").count()
 
 
 class TestClusteredRewrite:
@@ -2514,8 +2647,8 @@ class TestReviewFindingsR6:
         self, catalog, events_df
     ):
         """A derived partition-field name equal to a data column would
-        silently overwrite that column's data via the write path's
-        withColumn — reject at create/evolve/add/rename time."""
+        give one name two meanings in manifests and metadata tables —
+        reject at create/evolve/add/rename time, as Iceberg does."""
         clash = events_df.limit(4).withColumn("ts_day", F.lit("x"))
         with pytest.raises(ValueError, match="collides"):
             catalog.create_table(

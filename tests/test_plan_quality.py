@@ -231,6 +231,10 @@ class TestMergeOnReadPlans:
         plan = final_plan(t.scan()).split("== Initial Plan ==")[0]
         assert plan.count("LeftAnti") == 1
         assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
+        # The path → sequence map is folded into the join condition, so
+        # only key-matching rows look their sequence up; a projected
+        # lookup would run on every scanned row.
+        assert "__icelake_seq" not in plan
 
 
 class TestTpchWideningPlans:
