@@ -39,16 +39,12 @@ table property — the exact property the reference's fixture carries
 (reference table.rs:148-150).
 
 Planning at metadata scale (measured, tests/test_planning_scale.py):
-driver-side planning is O(files) at ~5-20 µs/entry — 20k files plan in
-<0.5 s, comfortable up to ~100k files. Beyond the
-``write.manifest.shard-size`` table property (default 25000) manifests
-are SHARDED into part files, and predicate scans prune them on
-EXECUTORS (`_distributed_prune`): each task json-loads its shards and
-applies the exact same `_entry_survives` logic, shipping only
-surviving entries to the driver — the same move real Iceberg makes
-with distributed manifest reads, so a 1M-file snapshot plans as a
-parallel metadata job instead of a driver loop. Parity of the two
-venues is asserted in tests.
+each snapshot has one manifest document, and scans plan on the driver
+by pruning its entries in one loop (`_split_by_predicate`), O(files) at
+~5-20 µs/entry — 20k files plan in <0.5 s, 100k in under 1 s. Every
+commit also loads and rewrites the whole entry list, so commit cost
+grows with the live file count; manifests reused across snapshots
+(Iceberg's manifest list) are the route past that.
 """
 
 from __future__ import annotations
@@ -108,7 +104,10 @@ class DataFileEntry:
     schema_id: int
     spec_id: int
     partition: dict  # {partition field name: value}
-    stats: dict  # {column: {"min": v, "max": v, "nulls": n}} (JSON-safe)
+    #: {field id: {"min": v, "max": v, "nulls": n}} (JSON-safe); keyed by
+    #: field id, like Iceberg's lower/upper bounds, so a rename or a
+    #: drop-and-reuse of a column name never reads another column's stats
+    stats: dict
     #: "data" | "position-deletes" | "equality-deletes" — Iceberg-v2
     #: file content kinds (the reference's delete Operation doc:
     #: "delete files were added to delete rows", snapshot.rs:28-29)
@@ -147,7 +146,8 @@ class DataFileEntry:
             schema_id=int(obj["schema-id"]),
             spec_id=int(obj["spec-id"]),
             partition=obj.get("partition", {}),
-            stats=obj.get("stats", {}),
+            # JSON object keys are strings; fresh entries carry ints
+            stats={int(k): v for k, v in obj.get("stats", {}).items()},
             content=obj.get("content", "data"),
             sequence_number=obj.get("sequence-number", 0),
             equality_ids=tuple(obj.get("equality-ids", ())),
@@ -370,7 +370,8 @@ def _latest_version(location: str) -> int:
     start = 0
     if os.path.exists(hint):
         try:
-            start = int(open(hint).read().strip())
+            with open(hint) as f:
+                start = int(f.read().strip())
         except ValueError:
             start = 0
     v = max(start, 1)
@@ -387,6 +388,14 @@ def _latest_version(location: str) -> int:
     while os.path.exists(_version_path(location, v + 1)):
         v += 1
     return v
+
+
+def _read_metadata(location: str) -> tuple[int, TableMetadata]:
+    """The latest metadata version of the table at ``location`` and
+    its parsed document."""
+    v = _latest_version(location)
+    with open(_version_path(location, v)) as f:
+        return v, TableMetadata.from_json_str(f.read())
 
 
 _TMP_SEQ = iter(range(1, 1 << 62))  # per-process unique temp suffixes
@@ -569,8 +578,7 @@ class Table:
 
     @property
     def metadata(self) -> TableMetadata:
-        v = _latest_version(self.location)
-        return TableMetadata.from_json_str(open(_version_path(self.location, v)).read())
+        return _read_metadata(self.location)[1]
 
     def schema(self) -> IceSchema:
         return self.metadata.current_schema()
@@ -591,8 +599,7 @@ class Table:
         retry budget from that parse."""
         failures = 0
         while True:
-            v = _latest_version(self.location)
-            md = TableMetadata.from_json_str(open(_version_path(self.location, v)).read())
+            v, md = _read_metadata(self.location)
             retries = int(md.properties.get("commit.retry.num-retries", "4"))
             new_md = updater(md)
             new_md = new_md.evolve(
@@ -615,50 +622,17 @@ class Table:
     def _manifest_path(self, snapshot_id: int) -> str:
         return os.path.join(_metadata_dir(self.location), f"snap-{snapshot_id}.json")
 
-    def _write_manifest(
-        self, snapshot_id: int, entries: list[DataFileEntry], shard_size: int | None = None
-    ) -> str:
-        """Write the snapshot's manifest. Beyond ``shard_size`` entries
-        the manifest is SHARDED: the head document lists part files of
-        ≤shard_size entries each, so scan planning can read and prune
-        the parts in parallel on executors instead of json-loading one
-        monolith on the driver (the 1M-file scale path — see module
-        docstring)."""
+    def _write_manifest(self, snapshot_id: int, entries: list[DataFileEntry]) -> str:
+        """Write the snapshot's manifest: one JSON document listing
+        every live entry."""
         path = self._manifest_path(snapshot_id)
-        if shard_size is not None and len(entries) > shard_size:
-            parts = []
-            for i in range(0, len(entries), shard_size):
-                part = path[: -len(".json")] + f"-part-{i // shard_size}.json"
-                with open(part, "w") as f:
-                    json.dump(
-                        {"entries": [e.to_json() for e in entries[i : i + shard_size]]}, f
-                    )
-                parts.append(part)
-            with open(path, "w") as f:
-                json.dump({"sharded": True, "parts": parts, "count": len(entries)}, f)
-            return path
         with open(path, "w") as f:
             json.dump({"entries": [e.to_json() for e in entries]}, f)
         return path
 
-    def _manifest_parts(self, snap: Snapshot) -> list[str] | None:
-        """Part files of a sharded manifest, or None if monolithic."""
-        with open(snap.manifest_list) as f:
-            doc = json.load(f)
-        return doc.get("parts") if doc.get("sharded") else None
-
     def _read_manifest(self, snap: Snapshot) -> list[DataFileEntry]:
         with open(snap.manifest_list) as f:
-            doc = json.load(f)
-        if doc.get("sharded"):
-            out: list[DataFileEntry] = []
-            for part in doc["parts"]:
-                with open(part) as f:
-                    out.extend(
-                        DataFileEntry.from_json(e) for e in json.load(f)["entries"]
-                    )
-            return out
-        return [DataFileEntry.from_json(e) for e in doc["entries"]]
+            return [DataFileEntry.from_json(e) for e in json.load(f)["entries"]]
 
     # -- write path ----------------------------------------------------
 
@@ -774,9 +748,10 @@ class Table:
         ``out_dir``. Partition directories are named by spec-field
         alias (``_partition_exprs``); they map back to the spec field
         name here, so manifests key partition values by ``pf.name``.
-        Data files record column stats. Delete files record none and
-        skip zero-row outputs, which delete nothing."""
+        Data files record column stats keyed by field id. Delete files
+        record none and skip zero-row outputs, which delete nothing."""
         names = {_partition_alias(pf): pf.name for pf in md.default_spec().fields}
+        field_ids = {f.name: f.id for f in md.current_schema().fields}
         entries = []
         for root, _dirs, files in os.walk(out_dir):
             partition = {}
@@ -792,6 +767,11 @@ class Table:
                 pf = pq.ParquetFile(path)
                 if content != "data" and pf.metadata.num_rows == 0:
                     continue
+                stats = {}
+                if content == "data":
+                    stats = {
+                        field_ids[n]: st for n, st in _file_stats(pf).items() if n in field_ids
+                    }
                 entries.append(
                     DataFileEntry(
                         path=path,
@@ -800,7 +780,7 @@ class Table:
                         schema_id=md.current_schema_id,
                         spec_id=md.default_spec_id,
                         partition=partition,
-                        stats=_file_stats(pf) if content == "data" else {},
+                        stats=stats,
                         content=content,
                         equality_ids=equality_ids,
                     )
@@ -834,11 +814,7 @@ class Table:
             else e
             for e in entries
         ]
-        manifest = self._write_manifest(
-            snap_id,
-            entries,
-            shard_size=int(md.properties.get("write.manifest.shard-size", "25000")),
-        )
+        manifest = self._write_manifest(snap_id, entries)
         snap = Snapshot(
             snapshot_id=snap_id,
             parent_snapshot_id=parent,
@@ -984,7 +960,7 @@ class Table:
         # record_count overstate `deleted`, and partial-match files
         # must still see the old delete set unchanged).
         dropped_meta_only = 0
-        conjuncts = _parse_conjuncts(where)
+        conjuncts = _parse_conjuncts(where, md.current_schema())
         if conjuncts is not None and not base_dels:
             full = [e for e in candidates if _entry_fully_matches(e, conjuncts)]
             if full:
@@ -1361,35 +1337,27 @@ class Table:
                 files.append(p)
         if not files:
             raise ValueError(f"no parquet files under {paths}")
-        # canonical-name aliases per field id (current schema names)
-        schema = md.current_schema()
-        alias_by_name: dict[str, str] = {}
-        for m in mapping:
-            fld = schema.field_by_id(m.field_id)
-            if fld is None:
-                continue
-            for n in m.names:
-                alias_by_name[n] = fld.name
+        field_id_of = {n: m.field_id for m in mapping for n in m.names}
         new_entries = []
         for fp in files:
             pf = pq.ParquetFile(fp)
-            raw_stats = _file_stats(pf)
-            # Remap stats keys to canonical names so min/max pruning on
-            # current-schema predicates still applies to raw files. If
-            # two raw columns map to the SAME canonical name (an alias
-            # plus the canonical name itself, or two aliases of one
-            # field), last-wins would record a wrong interval and
-            # stats pruning could incorrectly DROP the file — fall
-            # back to no stats for that column (conservative keep).
+            # Key stats by the field id each raw column maps to; a column
+            # with no mapping rule gets none. If two raw columns map to
+            # the SAME field (an alias plus the canonical name, or two
+            # aliases), either interval could be wrong for the one the
+            # read picks, and stats pruning could DROP a matching file —
+            # record no stats for that field (conservative keep).
             stats: dict = {}
-            colliding: set[str] = set()
-            for k, v in raw_stats.items():
-                canon = alias_by_name.get(k, k)
-                if canon in stats:
-                    colliding.add(canon)
-                stats[canon] = v
-            for canon in colliding:
-                stats[canon] = None
+            colliding: set[int] = set()
+            for name, st in _file_stats(pf).items():
+                fid = field_id_of.get(name)
+                if fid is None:
+                    continue
+                if fid in stats:
+                    colliding.add(fid)
+                stats[fid] = st
+            for fid in colliding:
+                stats[fid] = None
             new_entries.append(
                 DataFileEntry(
                     path=fp,
@@ -1494,34 +1462,50 @@ class Table:
         after = sum(e.record_count for e in new_entries)
         if before != after:
             raise RuntimeError(f"compaction changed record count: {before} -> {after}")
-        input_paths = {e.path for e in entries}
-        base_del_paths = {e.path for e in dels}
+        self._commit_replace(
+            "compact", branch, {e.path for e in entries}, {e.path for e in dels},
+            new_entries,
+            {"rewritten-data-files": str(len(entries)),
+             "materialized-delete-files": str(len(dels)),
+             "rewrite-strategy": strategy if cluster_by else "bin-pack",
+             **({"cluster-by": ",".join(cluster_by)} if cluster_by else {})},
+        )
+
+    def _commit_replace(
+        self,
+        op: str,
+        branch: str,
+        input_paths: "set[str]",
+        base_del_paths: "set[str]",
+        new_entries: "list[DataFileEntry]",
+        summary: dict,
+    ) -> None:
+        """Commit a ``replace`` snapshot that swaps the rewritten data
+        files ``input_paths`` and the delete files ``base_del_paths``
+        the rewrite applied for ``new_entries``.
+
+        The kept set is recomputed from `cur` on every (re)try, so a
+        concurrent append that wins the version race survives
+        ("replace" means data unchanged — dropping the appended files
+        would be silent data loss). If any input file is gone from
+        `cur` (a concurrent delete/overwrite rewrote it), committing
+        would resurrect its old rows; if a concurrent merge-on-read
+        delete added a delete file, the rewrite did not apply it and
+        dropping the inputs would undo that delete. Both conflict."""
 
         def updater(cur: TableMetadata) -> TableMetadata:
-            # Recompute from `cur` on every (re)try so a concurrent
-            # append that wins the version race survives ("replace"
-            # means data unchanged — dropping the appended files would
-            # be silent data loss). If any compacted INPUT file is gone
-            # from `cur` (a concurrent delete/overwrite rewrote it),
-            # committing would resurrect its old rows — conflict.
             cur_entries = self._current_entries(cur, branch)
-            cur_paths = {e.path for e in cur_entries}
-            vanished = input_paths - cur_paths
+            vanished = input_paths - {e.path for e in cur_entries}
             if vanished:
                 raise CommitConflict(
-                    f"compact on {self.identifier} conflicts with a concurrent "
+                    f"{op} on {self.identifier} conflicts with a concurrent "
                     f"rewrite of {len(vanished)} input file(s); re-run against "
                     "fresh metadata"
                 )
-            # A concurrent merge-on-read delete added positions this
-            # rewrite did not apply; dropping its delete file would
-            # undo the delete.
-            cur_del_paths = {
-                e.path for e in _delete_file_entries(cur_entries)
-            }
+            cur_del_paths = {e.path for e in _delete_file_entries(cur_entries)}
             if cur_del_paths - base_del_paths:
                 raise CommitConflict(
-                    f"compact on {self.identifier} conflicts with a concurrent "
+                    f"{op} on {self.identifier} conflicts with a concurrent "
                     "merge-on-read delete; re-run against fresh metadata"
                 )
             kept = [
@@ -1529,13 +1513,7 @@ class Table:
                 for e in cur_entries
                 if e.path not in input_paths and e.path not in base_del_paths
             ]
-            return self._new_snapshot(
-                cur, "replace", kept + new_entries, branch,
-                {"rewritten-data-files": str(len(entries)),
-                 "materialized-delete-files": str(len(dels)),
-                 "rewrite-strategy": strategy if cluster_by else "bin-pack",
-                 **({"cluster-by": ",".join(cluster_by)} if cluster_by else {})},
-            )
+            return self._new_snapshot(cur, "replace", kept + new_entries, branch, summary)
 
         self._commit(updater)
 
@@ -1598,33 +1576,19 @@ class Table:
                 if time_travel and snap.schema_id is not None
                 else md.current_schema()
             )
-            entries = dels = None
+            all_entries = self._read_manifest(snap)
+            entries = _data_entries(all_entries)
+            # Position-delete entries are never predicate-pruned (they
+            # carry no data stats); they apply to whatever data files
+            # survive pruning.
+            dels = _delete_file_entries(all_entries)
             if where:
-                parts = self._manifest_parts(snap)
-                if parts and len(parts) > 1:
-                    # sharded manifest: prune on executors, ship only
-                    # survivors (plus the never-pruned delete entries)
-                    # to the driver — the metadata-scale path. The
-                    # driver NEVER json-loads the full manifest here:
-                    # its work is O(survivors + deletes), not O(files).
-                    pruned = _distributed_prune(self.spark, parts, where, md)
-                    if pruned is not None:
-                        entries = _data_entries(pruned)
-                        dels = _delete_file_entries(pruned)
-            if entries is None:
-                all_entries = self._read_manifest(snap)
-                # Position-delete entries are never predicate-pruned
-                # (they carry no data stats); they apply to whatever
-                # data files survive pruning.
-                dels = _delete_file_entries(all_entries)
-                if where:
-                    entries, _ = _split_by_predicate(
-                        _data_entries(all_entries), where, md, self, keep_unmatched=False
-                    )
-                else:
-                    entries = _data_entries(all_entries)
-            if where and dels:
-                dels = _prune_scoped_eq_deletes(dels, where, md, self)
+                # Predicate columns resolve against the schema the scan
+                # reads with: a time-travel predicate names columns as
+                # they were then.
+                entries, _ = _split_by_predicate(entries, where, md, self, read_schema)
+                if dels:
+                    dels = _prune_scoped_eq_deletes(dels, where, md, self, read_schema)
             df = self._read_entries_as(md, entries, read_schema, delete_entries=dels)
         if where:
             df = df.filter(where)
@@ -1818,9 +1782,13 @@ class Table:
     # -- schema evolution (reference table.rs:32-34) --------------------
 
     def _evolve_schema(self, build_fields) -> None:
+        """Commit a new current schema. ``build_fields(cur, md)`` gets
+        the attempt's metadata, so it validates against exactly what
+        the commit replaces, and returns (fields, last column id)."""
+
         def updater(md: TableMetadata) -> TableMetadata:
             cur = md.current_schema()
-            new_fields, last_col = build_fields(cur, md.last_column_id)
+            new_fields, last_col = build_fields(cur, md)
             new_schema = IceSchema(
                 schema_id=max(s.schema_id for s in md.schemas) + 1,
                 struct=IceStruct(tuple(new_fields)),
@@ -1839,12 +1807,11 @@ class Table:
         """New columns are optional (existing files lack them)."""
         t = parse_type(type_str)
 
-        def build(cur: IceSchema, last_col: int):
+        def build(cur: IceSchema, md: TableMetadata):
             if cur.field_by_name(name):
                 raise ValueError(f"column already exists: {name}")
             # Reverse of the create_table collision rule: a new data
             # column must not shadow a derived partition-field name.
-            md = self.metadata
             for spec in md.partition_specs:
                 for pf in spec.fields:
                     if pf.name == name and pf.transform.kind != "identity":
@@ -1852,6 +1819,7 @@ class Table:
                             f"column name {name!r} collides with partition "
                             f"field {pf.name!r} of spec {spec.spec_id}"
                         )
+            last_col = md.last_column_id
             fid = last_col + 1
             new_last = max(last_col + 1, last_col + 1 + max_field_id(t))
             return list(cur.fields) + [IceField(fid, name, False, t, doc)], new_last
@@ -1859,12 +1827,12 @@ class Table:
         self._evolve_schema(build)
 
     def rename_column(self, old: str, new: str) -> None:
-        def build(cur: IceSchema, last_col: int):
+        def build(cur: IceSchema, md: TableMetadata):
             if not cur.field_by_name(old):
                 raise KeyError(f"no column {old}")
             if cur.field_by_name(new):
                 raise ValueError(f"column already exists: {new}")
-            for spec in self.metadata.partition_specs:
+            for spec in md.partition_specs:
                 for pf in spec.fields:
                     if pf.name == new and pf.transform.kind != "identity":
                         raise ValueError(
@@ -1875,12 +1843,12 @@ class Table:
                 IceField(f.id, new if f.name == old else f.name, f.required, f.type, f.doc)
                 for f in cur.fields
             ]
-            return fields, last_col
+            return fields, md.last_column_id
 
         self._evolve_schema(build)
 
     def drop_column(self, name: str) -> None:
-        def build(cur: IceSchema, last_col: int):
+        def build(cur: IceSchema, md: TableMetadata):
             f = cur.field_by_name(name)
             if not f:
                 raise KeyError(f"no column {name}")
@@ -1893,7 +1861,6 @@ class Table:
             # first instead. OLD (non-default) specs are fine to orphan:
             # their files' partition values live in the manifests and
             # are never re-derived from data.
-            md = self.metadata
             for pf in md.default_spec().fields:
                 if pf.source_id == f.id and pf.transform.kind != "void":
                     raise ValueError(
@@ -1914,7 +1881,7 @@ class Table:
                     "row-identity key equality deletes are written "
                     "against"
                 )
-            return [x for x in cur.fields if x.name != name], last_col
+            return [x for x in cur.fields if x.name != name], md.last_column_id
 
         self._evolve_schema(build)
 
@@ -1923,7 +1890,7 @@ class Table:
     def update_column_type(self, name: str, new_type: str) -> None:
         t = parse_type(new_type)
 
-        def build(cur: IceSchema, last_col: int):
+        def build(cur: IceSchema, md: TableMetadata):
             f = cur.field_by_name(name)
             if not f:
                 raise KeyError(f"no column {name}")
@@ -1941,7 +1908,7 @@ class Table:
                 IceField(x.id, x.name, x.required, t if x.name == name else x.type, x.doc)
                 for x in cur.fields
             ]
-            return fields, last_col
+            return fields, md.last_column_id
 
         self._evolve_schema(build)
 
@@ -2094,26 +2061,6 @@ class Table:
 
         self._commit(updater)
 
-    def rewrite_manifests(
-        self, shard_size: int | None = None, branch: str = MAIN_BRANCH
-    ) -> None:
-        """Metadata-only commit rewriting the current manifest layout —
-        CALL system.rewrite_manifests. Data files are untouched; the
-        entry list is re-written under the (optionally updated)
-        ``write.manifest.shard-size``, re-balancing scan-planning
-        parallelism after the shard target changes or after many
-        small commits."""
-        if shard_size is not None:
-            self.set_properties(**{"write.manifest.shard-size": str(shard_size)})
-
-        def updater(cur: TableMetadata) -> TableMetadata:
-            entries = self._current_entries(cur, branch)
-            return self._new_snapshot(
-                cur, "replace", entries, branch, {"rewrite-manifests": "true"}
-            )
-
-        self._commit(updater)
-
     def rollback_to_snapshot(self, snapshot_id: int) -> None:
         def updater(md: TableMetadata) -> TableMetadata:
             md.snapshot_by_id(snapshot_id)  # must exist
@@ -2150,9 +2097,7 @@ class Table:
         ``dry_run`` lists without deleting.
 
         Referenced-set construction reads every snapshot's manifest
-        (metadata, not data); the directory walk is driver-side here —
-        at real scale both sides become distributed listings joined on
-        path, same shape as `_distributed_prune`."""
+        (metadata, not data); the directory walk is driver-side."""
         md = self.metadata
         referenced: set[str] = set()
         for s in md.snapshots:
@@ -2273,7 +2218,6 @@ class Table:
                     for e in self._read_manifest(s)
                     if e.path not in live_files
                 )
-                to_delete.extend(self._manifest_parts(s) or [])
                 to_delete.append(s.manifest_list)
             return md.evolve(
                 snapshots=kept_snaps,
@@ -2304,19 +2248,7 @@ class Table:
         end = end_snapshot_id if end_snapshot_id is not None else md.current_snapshot_id
         if end is None:
             return self.spark.createDataFrame([], md.current_schema().to_spark())
-        chain: list[Snapshot] = []
-        cur: Snapshot | None = md.snapshot_by_id(end)
-        while cur is not None and cur.snapshot_id != start_snapshot_id:
-            chain.append(cur)
-            cur = (
-                md.snapshot_by_id(cur.parent_snapshot_id)
-                if cur.parent_snapshot_id is not None
-                else None
-            )
-        if start_snapshot_id is not None and cur is None:
-            raise KeyError(
-                f"snapshot {start_snapshot_id} is not an ancestor of {end}"
-            )
+        chain = _ancestry(md, end, start_snapshot_id)
         for snap in chain:
             if snap.operation not in ("append", "replace"):
                 # Incremental-append semantics: files rewritten by
@@ -2443,19 +2375,7 @@ class Table:
 
         if end is None:
             return _tagged_empty()
-        chain: list[Snapshot] = []
-        cur: Snapshot | None = md.snapshot_by_id(end)
-        while cur is not None and cur.snapshot_id != start_snapshot_id:
-            chain.append(cur)
-            cur = (
-                md.snapshot_by_id(cur.parent_snapshot_id)
-                if cur.parent_snapshot_id is not None
-                else None
-            )
-        if start_snapshot_id is not None and cur is None:
-            raise KeyError(
-                f"snapshot {start_snapshot_id} is not an ancestor of {end}"
-            )
+        chain = _ancestry(md, end, start_snapshot_id)
 
         def _state(snap: "Snapshot | None") -> DataFrame:
             if snap is None:
@@ -2565,37 +2485,12 @@ class Table:
             raise RuntimeError(
                 f"position-delete rewrite changed record count: {before} -> {after}"
             )
-        input_paths = {e.path for e in targets}
-        base_del_paths = {e.path for e in pos_dels}
-
-        def updater(cur: TableMetadata) -> TableMetadata:
-            cur_entries = self._current_entries(cur, branch)
-            cur_paths = {e.path for e in cur_entries}
-            if input_paths - cur_paths:
-                raise CommitConflict(
-                    f"rewrite_position_deletes on {self.identifier} conflicts "
-                    "with a concurrent rewrite of an input file; re-run "
-                    "against fresh metadata"
-                )
-            cur_del_paths = {e.path for e in _delete_file_entries(cur_entries)}
-            if cur_del_paths - base_del_paths:
-                raise CommitConflict(
-                    f"rewrite_position_deletes on {self.identifier} conflicts "
-                    "with a concurrent merge-on-read delete; re-run against "
-                    "fresh metadata"
-                )
-            kept = [
-                e
-                for e in cur_entries
-                if e.path not in input_paths and e.path not in base_del_paths
-            ]
-            return self._new_snapshot(
-                cur, "replace", kept + new_entries, branch,
-                {"rewritten-data-files": str(len(targets)),
-                 "removed-delete-files": str(len(pos_dels))},
-            )
-
-        self._commit(updater)
+        self._commit_replace(
+            "rewrite_position_deletes", branch, {e.path for e in targets},
+            {e.path for e in pos_dels}, new_entries,
+            {"rewritten-data-files": str(len(targets)),
+             "removed-delete-files": str(len(pos_dels))},
+        )
         return len(targets)
 
     # -- metadata inspection tables (reference README.md:27) ------------
@@ -2741,6 +2636,25 @@ class Table:
 # ---------------------------------------------------------------------------
 # Field-id projection (schema-evolution read path)
 # ---------------------------------------------------------------------------
+
+
+def _ancestry(md: TableMetadata, end: int, start: int | None) -> list[Snapshot]:
+    """Snapshots from ``end`` back along the parent chain, newest
+    first, stopping before ``start`` (exclusive; None walks to the
+    root). Raises KeyError when ``start`` is not an ancestor of
+    ``end``."""
+    chain: list[Snapshot] = []
+    cur: Snapshot | None = md.snapshot_by_id(end)
+    while cur is not None and cur.snapshot_id != start:
+        chain.append(cur)
+        cur = (
+            md.snapshot_by_id(cur.parent_snapshot_id)
+            if cur.parent_snapshot_id is not None
+            else None
+        )
+    if start is not None and cur is None:
+        raise KeyError(f"snapshot {start} is not an ancestor of {end}")
+    return chain
 
 
 def _spark_type_of(f: IceField):
@@ -2889,12 +2803,10 @@ def _json_safe(v):
 
 
 def _file_stats(pf: pq.ParquetFile) -> dict:
-    """Per-column min/max/null-count from parquet row-group stats.
-
-    Driver-side pyarrow here (local FS); at cluster scale this same
-    extraction runs distributed (mapPartitions over the file list) —
-    the manifest format doesn't change.
-    """
+    """Per-column min/max/null-count from parquet row-group stats,
+    keyed by the file's top-level column names. Manifests key them by
+    field id; callers map the names through the write schema or the
+    name mapping."""
     md = pf.metadata
     stats: dict[str, dict] = {}
     # Columns where ANY row group lacks min/max: the file-level interval
@@ -2952,6 +2864,9 @@ class _Conjunct:
     col: str
     op: str
     value: object  # python-typed literal
+    #: the field ``col`` names in the schema the query reads with; None
+    #: when unbound or not in that schema (no stats, no partition match)
+    field: IceField | None = None
 
 
 _IN_RE = re.compile(
@@ -2988,13 +2903,19 @@ def _parse_literal(lit: str):
             return None
 
 
-def _parse_conjuncts(where: str) -> list[_Conjunct] | None:
+def _parse_conjuncts(
+    where: str, schema: IceSchema | None = None
+) -> list[_Conjunct] | None:
     """Parse a conjunction of simple ``col op literal`` predicates —
     plus ``col IN (lit, ...)``, the dim-driven scan shape — for
     pruning. Anything unparseable → None (prune nothing; exactness is
     preserved because `where` is re-applied by Spark after the scan).
     ``NOT IN`` deliberately fails the IN regex (the NOT token breaks
-    the col-IN adjacency) and falls through to no-pruning."""
+    the col-IN adjacency) and falls through to no-pruning.
+
+    With ``schema``, each conjunct's column is bound once to the field
+    it names there; stats and partition sources are matched by that
+    field's id."""
     parts = re.split(r"\s+AND\s+", where, flags=re.IGNORECASE)
     out = []
     for p in parts:
@@ -3012,6 +2933,9 @@ def _parse_conjuncts(where: str) -> list[_Conjunct] | None:
         if not vals or any(v is None for v in vals):
             return None
         out.append(_Conjunct(mi["col"], "in", vals))
+    if schema is not None:
+        for c in out:
+            c.field = schema.field_by_name(c.col)
     return out
 
 
@@ -3069,7 +2993,7 @@ def _entry_fully_matches(entry: DataFileEntry, conjuncts: list[_Conjunct]) -> bo
     DELETE fast path). Requires zero nulls in each referenced column:
     a NULL row does not satisfy the predicate and must be kept."""
     for c in conjuncts:
-        st = entry.stats.get(c.col)
+        st = entry.stats.get(c.field.id) if c.field else None
         if not st or st.get("nulls") != 0:
             return False
         mn, mx = st.get("min"), st.get("max")
@@ -3163,9 +3087,8 @@ def _precompute_buckets(
     spark: SparkSession | None, md: TableMetadata, conjuncts: list[_Conjunct]
 ) -> dict[tuple[int, str], int]:
     """Bucket values of the conjunct literals for every bucket-transform
-    partition field, computed driver-side (one-row Spark evals) so the
-    pruning loop itself needs no SparkSession — that is what lets it
-    run inside executors for sharded manifests.
+    partition field, computed once per query (one-row Spark evals,
+    cached) rather than once per manifest entry.
 
     Only ``=`` and ``IN`` conjuncts participate, by design: bucket is a
     HASH transform, so a range predicate (``<``, ``>=``, BETWEEN) maps
@@ -3179,13 +3102,12 @@ def _precompute_buckets(
     out: dict[tuple[int, str], int] = {}
     if spark is None:
         return out
-    schema = md.current_schema()
     for spec in md.partition_specs:
         for pf in spec.fields:
             if pf.transform.kind != "bucket":
                 continue
             for c in conjuncts:
-                fld = schema.field_by_name(c.col)
+                fld = c.field
                 if fld is None or pf.source_id != fld.id or c.op not in ("=", "in"):
                     continue
                 vals = c.value if c.op == "in" else (c.value,)
@@ -3204,10 +3126,12 @@ def _entry_survives(
     md: TableMetadata,
     buckets: dict[tuple[int, str], int] | None = None,
 ) -> bool:
-    schema = md.current_schema()
     for c in conjuncts:
-        # (1) min/max stats check on the raw column
-        st = entry.stats.get(c.col)
+        fld = c.field
+        if fld is None:
+            continue
+        # (1) min/max stats check on the column's field id
+        st = entry.stats.get(fld.id)
         if st is not None:
             mn, mx = st.get("min"), st.get("max")
             v = c.value
@@ -3223,9 +3147,6 @@ def _entry_survives(
         # (2) hidden-partition check via the spec for this entry
         spec = next((s for s in md.partition_specs if s.spec_id == entry.spec_id), None)
         if spec is None:
-            continue
-        fld = schema.field_by_name(c.col)
-        if fld is None:
             continue
         for pf in spec.fields:
             if pf.source_id != fld.id or pf.name not in entry.partition:
@@ -3299,6 +3220,7 @@ def _prune_scoped_eq_deletes(
     where: str,
     md: TableMetadata,
     table: "Table",
+    schema: IceSchema | None = None,
 ) -> "list[DataFileEntry]":
     """Predicate-prune partition-SCOPED equality-delete entries.
 
@@ -3319,7 +3241,7 @@ def _prune_scoped_eq_deletes(
     ]
     if not prunable:
         return dels
-    keep, _ = _split_by_predicate(prunable, where, md, table, keep_unmatched=False)
+    keep, _ = _split_by_predicate(prunable, where, md, table, schema)
     kept_ids = {id(e) for e in keep}
     return [
         e
@@ -3334,10 +3256,12 @@ def _split_by_predicate(
     where: str,
     md: TableMetadata,
     table: "Table | None",
-    keep_unmatched: bool = True,
+    schema: IceSchema | None = None,
 ) -> tuple[list[DataFileEntry], list[DataFileEntry]]:
-    """(may-match, definitely-not-match) split of a file list."""
-    conjuncts = _parse_conjuncts(where)
+    """(may-match, definitely-not-match) split of a file list.
+    ``where``'s columns name fields of ``schema`` (default: the
+    current schema)."""
+    conjuncts = _parse_conjuncts(where, schema or md.current_schema())
     if conjuncts is None:
         return entries, []
     buckets = _precompute_buckets(table.spark if table else None, md, conjuncts)
@@ -3346,50 +3270,3 @@ def _split_by_predicate(
         (may if _entry_survives(e, conjuncts, md, buckets) else not_).append(e)
     return may, not_
 
-
-def _distributed_prune(
-    spark: SparkSession,
-    part_paths: list[str],
-    where: str,
-    md: TableMetadata,
-) -> list[DataFileEntry] | None:
-    """Prune a SHARDED manifest on executors: each task json-loads its
-    shard(s) and applies the exact same `_entry_survives` logic; only
-    surviving entries return to the driver. This is planning — not
-    data — so per-partition imperative logic (an RDD) is the right
-    tool: it parallelizes manifest I/O + pruning CPU and bounds what
-    the driver materializes to the matching file list. Returns None
-    when the predicate isn't prunable (caller reads everything)."""
-    conjuncts = _parse_conjuncts(where)
-    if conjuncts is None:
-        return None
-    buckets = _precompute_buckets(spark, md, conjuncts)
-    md_json = md.to_json_str()
-
-    def prune_parts(paths):
-        md_local = TableMetadata.from_json_str(md_json)
-        for p in paths:
-            with open(p) as f:
-                for obj in json.load(f)["entries"]:
-                    e = DataFileEntry.from_json(obj)
-                    # delete entries carry no data stats and are never
-                    # pruned — ship them all back (the caller applies
-                    # them to whatever data files survive), so the
-                    # driver needs no full manifest read of its own
-                    if e.content != "data" or _entry_survives(
-                        e, conjuncts, md_local, buckets
-                    ):
-                        yield e.to_json()
-
-    n_tasks = min(len(part_paths), spark.sparkContext.defaultParallelism)
-    try:
-        survivors = (
-            spark.sparkContext.parallelize(part_paths, n_tasks)
-            .mapPartitions(prune_parts)
-            .collect()
-        )
-    except Exception:
-        # e.g. executors that cannot import this package (PYTHONPATH) —
-        # correctness falls back to the driver-side pruning loop
-        return None
-    return [DataFileEntry.from_json(o) for o in survivors]

@@ -157,10 +157,14 @@ class TestLifecycle:
         for i in range(4):
             t.overwrite(events_df.limit(10 * (i + 1)))
         assert len(t.metadata.snapshots) == 4
+        manifests = {s.snapshot_id: s.manifest_list for s in t.metadata.snapshots}
         removed = t.expire_snapshots(retain_last=1)
         assert len(removed) == 3
         assert t.to_df().count() == 40  # head intact
         assert len(t.metadata.snapshots) == 1
+        # an expired snapshot's manifest goes with it; the head's stays
+        assert not any(os.path.exists(manifests[sid]) for sid in removed)
+        assert os.path.exists(manifests[t.metadata.current_snapshot_id])
 
     def test_expire_keeps_files_shared_with_kept_snapshots(
         self, catalog, events_df
@@ -1065,8 +1069,8 @@ class TestAdviceR2Fixes:
         ]
         assert raw_entries
         for e in raw_entries:
-            assert e.stats.get("value") is None  # conservative: no interval
-            assert e.stats.get("event_id") is not None  # untouched column keeps stats
+            assert e.stats.get(sch.field_by_name("value").id) is None  # conservative: no interval
+            assert e.stats.get(sch.field_by_name("event_id").id) is not None  # untouched column keeps stats
         # stats-pruned scan must still read the raw file (conservative keep)
         hi = t.scan(where="value >= 0").count() + t.scan(where="value < 0").count()
         assert hi == t.to_df().count()
@@ -2337,23 +2341,6 @@ class TestFastForwardAndManifests:
         with _pytest.raises(ValueError, match="diverged"):
             t.fast_forward("main", "staging")
 
-    def test_rewrite_manifests_reshards_without_touching_data(self, catalog, events_df):
-        t = catalog.create_table("db.rwm", events_df.schema)
-        for i in range(3):
-            t.append(events_df.where(F.col("event_id") % 3 == i))
-        before_rows = t.to_df().count()
-        before_files = {e.path for e in t._current_entries(t.metadata)}
-        snap0 = max(t.metadata.snapshots, key=lambda s: s.sequence_number)
-        assert t._manifest_parts(snap0) is None  # few entries: monolithic
-        t.rewrite_manifests(shard_size=1)
-        snap1 = max(t.metadata.snapshots, key=lambda s: s.sequence_number)
-        assert snap1.summary["operation"] == "replace"
-        assert snap1.summary["rewrite-manifests"] == "true"
-        parts = t._manifest_parts(snap1)
-        assert parts is not None and len(parts) == len(before_files)
-        assert {e.path for e in t._current_entries(t.metadata)} == before_files
-        assert t.to_df().count() == before_rows
-
 
 class TestChangelogScan:
     def _mk(self, spark, catalog):
@@ -2752,6 +2739,102 @@ class TestDropColumnGuards:
         t.drop_column("v")
         t.append(spark.createDataFrame([(2,)], "id long"))
         assert t.scan().count() == 2
+
+
+class TestColumnStatsByFieldId:
+    """Manifest column stats are keyed by field id, and a predicate's
+    column resolves to a field id against the schema the scan reads
+    with. Keyed by name, a dropped column's stats would answer for a
+    later column that took its name: pruning then drops files holding
+    matching rows, and the metadata-only delete path drops files whose
+    rows do not match."""
+
+    @staticmethod
+    def _drop_a_rename_b(spark, catalog, name):
+        df = spark.createDataFrame([(7, 100), (7, 200)], "a long, b long")
+        t = catalog.create_table(name, df.schema)
+        t.append(df)
+        snap = t.metadata.current_snapshot_id
+        t.drop_column("a")
+        t.rename_column("b", "a")
+        return t, snap
+
+    def test_filtered_scan_after_drop_and_rename(self, catalog, spark):
+        t, _ = self._drop_a_rename_b(spark, catalog, "db.sfid_scan")
+        assert [r.a for r in t.scan(where="a = 200").collect()] == [200]
+        assert sorted(r.a for r in t.scan(where="a >= 100").collect()) == [100, 200]
+
+    def test_cow_delete_after_drop_and_rename_keeps_rows(self, catalog, spark):
+        t, _ = self._drop_a_rename_b(spark, catalog, "db.sfid_del")
+        # the dropped column was 7 everywhere; the live `a` never is
+        assert t.delete("a = 7") == 0
+        assert sorted(r.a for r in t.to_df().collect()) == [100, 200]
+        assert t.delete("a = 100") == 1
+        assert [r.a for r in t.to_df().collect()] == [200]
+
+    def test_rename_swap(self, catalog, spark):
+        df = spark.createDataFrame([(1, 100), (2, 200)], "x long, y long")
+        t = catalog.create_table("db.sfid_swap", df.schema)
+        t.append(df)
+        t.rename_column("x", "tmp")
+        t.rename_column("y", "x")
+        t.rename_column("tmp", "y")
+        assert [(r.x, r.y) for r in t.scan(where="x = 100").collect()] == [(100, 1)]
+        assert t.delete("x = 100") == 1
+        assert [(r.x, r.y) for r in t.to_df().collect()] == [(200, 2)]
+
+    def test_add_files_raw_file_after_drop_and_rename(self, catalog, spark, tmp_path):
+        from iceberg_rs_spark.model import NameMapping
+
+        df = spark.createDataFrame([(7, 100), (7, 200)], "a long, b long")
+        t = catalog.create_table("db.sfid_raw", df.schema)
+        raw_dir = str(tmp_path / "sfid_raw")
+        df.coalesce(1).write.parquet(raw_dir)
+        sch = t.schema()
+        t.add_files(
+            raw_dir,
+            name_mapping=[
+                NameMapping(field_id=sch.field_by_name("a").id, names=("a",)),
+                NameMapping(field_id=sch.field_by_name("b").id, names=("b",)),
+            ],
+        )
+        t.drop_column("a")
+        t.rename_column("b", "a")
+        assert [r.a for r in t.scan(where="a = 200").collect()] == [200]
+
+    def test_time_travel_predicate_uses_the_snapshot_schema(self, catalog, spark):
+        t, snap = self._drop_a_rename_b(spark, catalog, "db.sfid_tt")
+        # at `snap`, `a` is the dropped column (7 in every row)
+        rows = t.scan(snapshot_id=snap, where="a = 7").collect()
+        assert sorted((r.a, r.b) for r in rows) == [(7, 100), (7, 200)]
+        assert t.scan(snapshot_id=snap, where="a = 100").count() == 0
+
+
+class TestNoLeakedFileHandles:
+    def test_table_operations_close_their_files(self, catalog, spark):
+        """Every file the engine opens is closed by the engine, not left
+        to the garbage collector (``python -X dev`` reports the latter
+        as ResourceWarning)."""
+        import gc
+        import warnings
+
+        df = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "id long, s string")
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always", ResourceWarning)
+            t = catalog.create_table("db.handles", df.schema)
+            t.append(df)
+            assert t.scan(where="id >= 2").count() == 2
+            assert t.delete("id = 1") == 1
+            assert t.delete("id = 2", mode="merge-on-read") == 1
+            assert [r.id for r in t.scan().collect()] == [3]
+            gc.collect()
+        leaks = [
+            str(w.message)
+            for w in caught
+            if issubclass(w.category, ResourceWarning)
+            and w.filename.endswith("icelake.py")
+        ]
+        assert leaks == []
 
 
 class TestRandomizedLifecycleDifferential:
@@ -4033,14 +4116,14 @@ class TestRandomizedLifecycleDifferential:
     def test_random_maintenance_interleaved_is_read_invisible(
         self, catalog, spark
     ):
-        """Maintenance dimension of the sweep: rewrite_manifests,
+        """Maintenance dimension of the sweep: compact,
         rewrite_position_deletes, and remove_orphan_files fired at
         random points INSIDE a random write history. The example pins
         each cover one call on a quiet table; the interaction space —
         a position rewrite while a tag still time-travels to the
         pre-rewrite files, an orphan sweep over injected junk while
-        rollback has forked the history, a manifest reshard between a
-        MoR delete and a MoR merge — is where maintenance corrupts
+        rollback has forked the history, a compaction between a MoR
+        delete and a MoR merge — is where maintenance corrupts
         reads. Invariants checked after EVERY op:
 
         * the live read equals the dict oracle (maintenance is
@@ -4049,8 +4132,10 @@ class TestRandomizedLifecycleDifferential:
           never a file any snapshot on any fork still references;
         * rewrite_position_deletes refuses (equality-delete guard,
           icelake.py rewrite_position_deletes) exactly when the live
-          entry list carries equality deletes, and the refusal leaves
-          the table untouched;
+          entry list carries equality deletes next to position
+          deletes, and the refusal leaves the table untouched; with no
+          position deletes it has nothing to rewrite, returns 0 and
+          commits nothing;
 
         and at the end: time travel to every recorded snapshot and
         every tag, and changelog/incremental silence over every
@@ -4061,7 +4146,10 @@ class TestRandomizedLifecycleDifferential:
         from iceberg_rs_spark.sources.icelake import _delete_file_entries
 
         ops_seen: Counter = Counter()
-        for seed in (1, 5):  # chosen so the union fires every op kind
+        rewrite_outcomes: Counter = Counter()
+        # chosen so the union fires every op kind and every
+        # rewrite_position_deletes outcome
+        for seed in (5, 6, 10):
             rnd = random.Random(seed)
             t = catalog.create_table(
                 f"db.rand_maint_{seed}",
@@ -4103,8 +4191,8 @@ class TestRandomizedLifecycleDifferential:
             for step in range(14):
                 ops = [
                     "append", "delete_mor", "delete_cow", "merge_mor",
-                    "merge_cow", "rewrite_manifests", "rewrite_pos_dels",
-                    "orphan_sweep", "compact", "tag",
+                    "merge_cow", "rewrite_pos_dels", "orphan_sweep",
+                    "compact", "tag",
                 ]
                 if step < 7:
                     ops.append("rollback")
@@ -4132,24 +4220,30 @@ class TestRandomizedLifecycleDifferential:
                         continue
                     t.merge(self._df(spark, rows), on=["id"], mode=mode)
                     state.update({i: (g, v) for i, g, v in rows})
-                elif op == "rewrite_manifests":
-                    t.rewrite_manifests(shard_size=rnd.randint(1, 4))
                 elif op == "rewrite_pos_dels":
-                    has_eq = any(
-                        e.content == "equality-deletes"
+                    kinds = {
+                        e.content
                         for e in _delete_file_entries(
                             t._current_entries(t.metadata)
                         )
-                    )
-                    if has_eq:
-                        before = t.metadata.current_snapshot_id
+                    }
+                    before = t.metadata.current_snapshot_id
+                    if "position-deletes" not in kinds:
+                        rewrite_outcomes["nothing to do"] += 1
+                        assert t.rewrite_position_deletes() == 0
+                        assert t.metadata.current_snapshot_id == before, (
+                            f"seed {seed}: rewrite with nothing to do committed"
+                        )
+                    elif "equality-deletes" in kinds:
+                        rewrite_outcomes["refused"] += 1
                         with pytest.raises(ValueError, match="equality-delete"):
                             t.rewrite_position_deletes()
                         assert t.metadata.current_snapshot_id == before, (
                             f"seed {seed}: refused rewrite still committed"
                         )
                     else:
-                        t.rewrite_position_deletes()
+                        rewrite_outcomes["rewritten"] += 1
+                        assert t.rewrite_position_deletes() > 0
                 elif op == "orphan_sweep":
                     junk = inject_junk(rnd.randint(1, 2))
                     removed = t.remove_orphan_files()
@@ -4191,7 +4285,7 @@ class TestRandomizedLifecycleDifferential:
             # yield nothing and incremental scan must count zero rows
             # over their ranges (silently re-delivering rewritten files
             # would duplicate rows downstream)
-            maintenance = {"rewrite_manifests", "rewrite_pos_dels", "compact"}
+            maintenance = {"rewrite_pos_dels", "compact"}
             for (s0, d0, _), (s1, d1, op1) in zip(states, states[1:]):
                 if s0 == s1 or op1 not in maintenance:
                     continue
@@ -4213,9 +4307,11 @@ class TestRandomizedLifecycleDifferential:
         # the seeds, or a seed change hollows the sweep
         assert set(ops_seen) == {
             "append", "delete_mor", "delete_cow", "merge_mor", "merge_cow",
-            "rewrite_manifests", "rewrite_pos_dels", "orphan_sweep",
-            "compact", "tag", "rollback",
+            "rewrite_pos_dels", "orphan_sweep", "compact", "tag", "rollback",
         }, dict(ops_seen)
+        assert set(rewrite_outcomes) == {"nothing to do", "refused", "rewritten"}, (
+            dict(rewrite_outcomes)
+        )
 
     def test_random_concurrent_writer_races_never_lose_updates(
         self, catalog, spark, monkeypatch

@@ -2,17 +2,12 @@
 
 icelake plans scans on the driver: one JSON manifest per snapshot,
 pruned in a Python loop (`_split_by_predicate`). This file *measures*
-that ceiling so it is a documented number, not a guess:
-
-- planning is O(files) with a per-entry cost of ~5-20 µs, so a
-  10k-file snapshot plans in well under a second — comfortably inside
-  the driver budget for the table sizes this repo's corpus builds;
-- at ~1M files (true 100 TB tables) the same loop would cost ~10 s
-  plus a multi-hundred-MB json.load, which is why real Iceberg shards
-  manifests and distributes manifest reads. The scale path (sharded
-  manifest parts + Spark-side pruning that only ships surviving file
-  paths back to the driver) keeps the same manifest entry format —
-  see the module docstring of sources/icelake.py.
+that ceiling so it is a documented number, not a guess: planning is
+O(files) with a per-entry cost of ~5-20 µs, so 20k files plan in well
+under a second and 100k in about one — inside the driver budget for
+the table sizes this repo's corpus builds. Past that, reused manifests
+that are pruned as a whole (Iceberg's manifest list) are the route,
+not a faster loop.
 """
 
 from __future__ import annotations
@@ -39,9 +34,9 @@ def _synthetic_entries(n: int) -> list[DataFileEntry]:
                 schema_id=0,
                 spec_id=0,
                 partition={"ts_day": str(19723 + i % 100)},
-                stats={
-                    "event_id": {"min": lo, "max": hi, "nulls": 0},
-                    "value": {"min": 0.0, "max": 100.0, "nulls": 0},
+                stats={  # keyed by field id: event_id = 1, value = 2
+                    1: {"min": lo, "max": hi, "nulls": 0},
+                    2: {"min": 0.0, "max": 100.0, "nulls": 0},
                 },
             )
         )
@@ -83,144 +78,6 @@ def _metadata_stub(spark):
     )
 
 
-class TestShardedManifest:
-    def test_sharded_write_read_prune_roundtrip(self, spark, tmp_path, sf_dir):
-        """Past write.manifest.shard-size the manifest splits into
-        parts; reads see every entry, predicate scans prune on
-        executors, and results equal the unsharded table's."""
-        from pyspark.sql import functions as F
-
-        from iceberg_rs_spark.sources.fixtures import load_table
-        from iceberg_rs_spark.sources.icelake import Catalog
-
-        events = load_table(spark, sf_dir, "events")
-        catalog = Catalog(spark, str(tmp_path / "wh"))
-        t = catalog.create_table(
-            "db.sharded",
-            events.schema,
-            partition_by=[("ts", "day")],
-            properties={"write.manifest.shard-size": "8"},
-        )
-        t.append(events)  # ~30 day-partitions → ~30 files → ≥4 shards
-        snap = t.metadata.snapshot_by_id(t.metadata.current_snapshot_id)
-        parts = t._manifest_parts(snap)
-        assert parts is not None and len(parts) >= 2
-        assert t._read_manifest(snap)  # concatenated read works
-        where = "ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts < TIMESTAMP '2024-01-12 00:00:00'"
-        got = t.scan(where=where).agg(F.count("*"), F.round(F.sum("value"), 2)).first()
-        exp = events.where(where).agg(F.count("*"), F.round(F.sum("value"), 2)).first()
-        assert tuple(got) == tuple(exp)
-
-    def test_distributed_prune_matches_driver_prune(self, spark, tmp_path, sf_dir):
-        """The executor-side pruning path must select exactly the same
-        file set as the driver-side loop (same _entry_survives logic,
-        two execution venues)."""
-        from iceberg_rs_spark.sources.fixtures import load_table
-        from iceberg_rs_spark.sources.icelake import (
-            Catalog,
-            _distributed_prune,
-            _split_by_predicate,
-        )
-
-        events = load_table(spark, sf_dir, "events")
-        catalog = Catalog(spark, str(tmp_path / "wh2"))
-        t = catalog.create_table(
-            "db.sharded2",
-            events.schema,
-            partition_by=[("ts", "day")],
-            properties={"write.manifest.shard-size": "8"},
-        )
-        t.append(events)
-        md = t.metadata
-        snap = md.snapshot_by_id(md.current_snapshot_id)
-        parts = t._manifest_parts(snap)
-        where = "ts >= TIMESTAMP '2024-01-05 00:00:00'"
-        dist = _distributed_prune(spark, parts, where, md)
-        assert dist is not None
-        drv, _ = _split_by_predicate(t._read_manifest(snap), where, md, t)
-        assert sorted(e.path for e in dist) == sorted(e.path for e in drv)
-        assert 0 < len(dist) < snap_file_count(t)
-
-    def test_scan_uses_distributed_prune_above_shard_threshold(
-        self, spark, tmp_path, sf_dir, monkeypatch
-    ):
-        """HARD gate (VERDICT r3 #6): once the manifest is sharded, a
-        predicate scan MUST plan via the executor-side prune — and the
-        driver must NOT json-load the full manifest at all (its
-        planning work is O(survivors + deletes), the posture that
-        keeps a 1M-file table plannable)."""
-        from pyspark.sql import functions as F
-
-        import iceberg_rs_spark.sources.icelake as lake
-        from iceberg_rs_spark.sources.fixtures import load_table
-
-        events = load_table(spark, sf_dir, "events")
-        catalog = lake.Catalog(spark, str(tmp_path / "wh4"))
-        t = catalog.create_table(
-            "db.sharded4",
-            events.schema,
-            partition_by=[("ts", "day")],
-            properties={"write.manifest.shard-size": "8"},
-        )
-        t.append(events)
-        calls = {"dist": 0, "manifest": 0}
-        orig_dist = lake._distributed_prune
-        orig_read = lake.Table._read_manifest
-
-        def counting_dist(*a, **k):
-            calls["dist"] += 1
-            return orig_dist(*a, **k)
-
-        def counting_read(self, snap):
-            calls["manifest"] += 1
-            return orig_read(self, snap)
-
-        monkeypatch.setattr(lake, "_distributed_prune", counting_dist)
-        monkeypatch.setattr(lake.Table, "_read_manifest", counting_read)
-        where = "ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts < TIMESTAMP '2024-01-12 00:00:00'"
-        got = t.scan(where=where).agg(
-            F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("s")
-        ).first()
-        assert calls["dist"] == 1, "distributed prune must activate when sharded"
-        assert calls["manifest"] == 0, (
-            "driver must not read the full manifest when executors prune"
-        )
-        exp = events.where(where).agg(
-            F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("s")
-        ).first()
-        assert tuple(got) == tuple(exp)
-
-    def test_expire_deletes_shard_parts(self, spark, tmp_path, sf_dir):
-        import os
-
-        from pyspark.sql import functions as F
-
-        from iceberg_rs_spark.sources.fixtures import load_table
-        from iceberg_rs_spark.sources.icelake import Catalog
-
-        events = load_table(spark, sf_dir, "events")
-        catalog = Catalog(spark, str(tmp_path / "wh3"))
-        t = catalog.create_table(
-            "db.sharded3",
-            events.schema,
-            partition_by=[("ts", "day")],
-            properties={"write.manifest.shard-size": "8"},
-        )
-        t.append(events.where(F.col("event_id") % 2 == 0))
-        snap1 = t.metadata.snapshot_by_id(t.metadata.current_snapshot_id)
-        parts1 = t._manifest_parts(snap1)
-        assert parts1
-        t.overwrite(events.where(F.col("event_id") % 2 == 1))
-        t.expire_snapshots(retain_last=1)
-        assert not os.path.exists(snap1.manifest_list)
-        assert all(not os.path.exists(p) for p in parts1)
-
-
-def snap_file_count(t) -> int:
-    md = t.metadata
-    return len(t._read_manifest(md.snapshot_by_id(md.current_snapshot_id)))
-
-
 class TestPlanningScale:
     def test_stats_pruning_20k_files_under_budget(self, spark):
         """Planning 20k files must stay under 2 s (measured ~0.1-0.4 s)
@@ -241,8 +98,7 @@ class TestPlanningScale:
         """HARD gate (VERDICT r3 #6): driver-side planning of a
         100k-entry manifest must finish in under 1 s (measured
         ~0.15 s; the assertion is the contract, not the measurement).
-        Beyond this scale the sharded-manifest executor prune takes
-        over (test_scan_uses_distributed_prune_above_shard_threshold)."""
+        Every scan plans through this one loop, at any table size."""
         entries = _synthetic_entries(100_000)
         md = _metadata_stub(spark)
         _split_by_predicate(entries[:2000], "event_id = 1", md, table=None)  # warm
