@@ -20,6 +20,14 @@ codegen-able; write-side bucketing and query-side pruning both go
 through this one function, so the engine is self-consistent. Only
 cross-engine Iceberg interop would need the spec hash.
 
+Spark's ``hash()`` is type-sensitive, so a bucket partition field
+hashes the representation the spec fixes, not the column's type: an
+``int`` hashes as ``long`` and a decimal at precision 38 (same scale).
+That keeps every bucket valid across the type promotions schema
+evolution allows (``int → long``, decimal precision widening), as in
+the spec. ``float → double`` changes the hash, so, as in the spec,
+float and double columns cannot be bucketed.
+
 All expressions are tz-independent for TIMESTAMP_NTZ inputs (calendar
 arithmetic, not epoch-seconds arithmetic).
 """
@@ -28,6 +36,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from iceberg_rs_spark.model.partition import Transform
 
@@ -72,9 +81,12 @@ def truncate_string(width: int, col: Column | str) -> Column:
     return F.substring(_c(col), 1, width)
 
 
-def transform_column(transform: Transform, col: Column | str, *, is_string: bool = False) -> Column:
+def transform_column(
+    transform: Transform, col: Column | str, source_type: T.DataType | None = None
+) -> Column:
     """Transform → Column factory (the query-side realization of
-    partition.rs:15-35)."""
+    partition.rs:15-35). ``source_type`` is the source column's Spark
+    type; bucket and truncate depend on it."""
     kind, param = transform.kind, transform.param
     c = _c(col)
     if kind == "void":
@@ -90,7 +102,14 @@ def transform_column(transform: Transform, col: Column | str, *, is_string: bool
     if kind == "hour":
         return hours_from_epoch(c)
     if kind == "bucket":
+        # hash the promotion-stable representation (module docstring)
+        if isinstance(source_type, (T.ByteType, T.ShortType, T.IntegerType)):
+            c = c.cast(T.LongType())
+        elif isinstance(source_type, T.DecimalType):
+            c = c.cast(T.DecimalType(38, source_type.scale))
         return bucket(param, c)
     if kind == "truncate":
-        return truncate_string(param, c) if is_string else truncate(param, c)
+        if isinstance(source_type, T.StringType):
+            return truncate_string(param, c)
+        return truncate(param, c)
     raise ValueError(f"unknown transform: {transform.name}")

@@ -7,12 +7,13 @@ from __future__ import annotations
 
 import datetime as dt
 import os
+from decimal import Decimal
 
 import pytest
 from pyspark.sql import functions as F
 
 from iceberg_rs_spark.sources.fixtures import load_table
-from iceberg_rs_spark.sources.icelake import Catalog
+from iceberg_rs_spark.sources.icelake import Catalog, _split_by_predicate
 
 
 @pytest.fixture()
@@ -282,6 +283,24 @@ class TestSchemaEvolution:
         specs = {e.spec_id for e in t._current_entries(t.metadata)}
         assert specs == {0, 1}
 
+    def test_unknown_column_in_spec_or_sort_order_is_a_value_error(
+        self, catalog, events_df
+    ):
+        """create_table, set_partition_spec and write_ordered_by share
+        one field builder, so an unknown source column is the same
+        ValueError on all three and commits nothing."""
+        t = catalog.create_table("db.unknown_col", events_df.schema)
+        before = t.metadata
+        with pytest.raises(ValueError, match="partition source column not in schema"):
+            t.set_partition_spec([("nope", "day")])
+        with pytest.raises(ValueError, match="sort source column not in schema"):
+            t.write_ordered_by(["nope"])
+        with pytest.raises(ValueError, match="sort source column not in schema"):
+            catalog.create_table("db.unknown_col2", events_df.schema, sort_by=["nope"])
+        after = t.metadata
+        assert after.partition_specs == before.partition_specs
+        assert after.sort_orders == before.sort_orders
+
     def test_sort_order_declaration(self, catalog, events_df):
         t = catalog.create_table(
             "db.sorted",
@@ -338,6 +357,95 @@ class TestPruning:
             t._current_entries(md), f"event_id = {ids[0]}", md, t
         )
         assert len(no) > 0  # it actually pruned, not conservative-kept
+
+    @pytest.mark.parametrize(
+        "old_type, new_type, value",
+        [
+            ("int", "long", lambda i: i),
+            ("decimal(10,2)", "decimal(20,2)", lambda i: Decimal(i) + Decimal("0.25")),
+        ],
+        ids=["int-to-long", "decimal-precision"],
+    )
+    def test_bucket_pruning_survives_type_promotion(
+        self, catalog, spark, old_type, new_type, value
+    ):
+        """Files bucketed before ``int → long`` or a decimal precision
+        widening keep their buckets: ints hash as long and decimals at
+        precision 38, on write and at planning. Before, after the int
+        widening ``id = i`` missed the row for 15 of 20 ids."""
+        df = spark.createDataFrame(
+            [(value(i), i) for i in range(20)], f"k {old_type}, n int"
+        )
+        t = catalog.create_table("db.bucket_promote", df.schema, partition_by=[("k", "bucket[4]")])
+        t.append(df)
+        t.update_column_type("k", new_type)
+        for i in range(20):
+            assert [r.n for r in t.scan(where=f"k = {value(i)}").collect()] == [i]
+        md = t.metadata
+        may, no = _split_by_predicate(t._current_entries(md), f"k = {value(3)}", md, t)
+        assert len(may) == 1 and len(no) > 0
+
+    @pytest.mark.parametrize(
+        "spec",
+        [[("s", "bucket[4]")], [("s", "truncate[1]")], [("n", "identity")], [("n", "truncate[10]")]],
+        ids=["bucket-s", "truncate-s", "identity-n", "truncate-n"],
+    )
+    def test_partition_pruning_literal_of_another_type(self, catalog, spark, spec):
+        """Spark compares a literal of another kind by casting the
+        column: ``s = 5`` holds for '05' and ' 5', ``n < '10'`` for 9.
+        Pruning must keep those rows, so such a literal prunes
+        nothing."""
+        df = spark.createDataFrame(
+            [("5", 5), ("05", 9), ("005", 10), (" 5", 50), ("6", 6)],
+            "s string, n long",
+        )
+        t = catalog.create_table("db.othertype", df.schema, partition_by=spec)
+        t.append(df)
+        for where in ["s = 5", "s IN (5, 6)", "n = '5'", "n < '10'", "n IN ('9', '50')"]:
+            exp = sorted(r.n for r in t.scan().filter(where).collect())
+            assert sorted(r.n for r in t.scan(where=where).collect()) == exp, where
+
+    @pytest.mark.parametrize("spec", [[("d", "identity")], [("d", "month")], []])
+    def test_date_column_with_a_time_bearing_literal(self, catalog, spark, spec):
+        """Spark casts a string literal to DATE to compare it with a
+        date column, so ``d = '2024-01-01 05:00:00'`` holds for
+        2024-01-01; neither partition values nor stats may prune it."""
+        df = spark.createDataFrame(
+            [(dt.date(2024, 1, d), d) for d in (1, 2, 3)], "d date, n int"
+        ).repartition(3, "n")
+        t = catalog.create_table("db.dlit", df.schema, partition_by=spec)
+        t.append(df)
+        for where in [
+            "d = '2024-01-01 05:00:00'",
+            "d >= '2024-01-02 05:00:00'",
+            "d IN ('2024-01-03 01:00:00')",
+            "d < '2024-01-02'",
+        ]:
+            exp = sorted(r.n for r in t.scan().filter(where).collect())
+            assert sorted(r.n for r in t.scan(where=where).collect()) == exp, where
+
+    def test_iso_date_literal_on_string_column_never_deletes_by_metadata(
+        self, catalog, spark
+    ):
+        """``s = '2024-01-01'`` compares strings, so a file whose only
+        value is '2024-01-01T00:00:00' holds no match and must not be
+        dropped by the metadata-only delete path."""
+        df = spark.createDataFrame([("2024-01-01T00:00:00", 1)], "s string, n int")
+        t = catalog.create_table("db.isostr", df.schema)
+        t.append(df)
+        assert t.delete("s = '2024-01-01'") == 0
+        assert [r.n for r in t.scan().collect()] == [1]
+
+    @pytest.mark.parametrize("typ", ["float", "double"])
+    def test_bucket_on_float_or_double_rejected(self, catalog, spark, typ):
+        """As in the spec: ``float → double`` promotion changes Spark's
+        hash, so neither can be a bucket source."""
+        df = spark.createDataFrame([(1.0, 1)], f"f {typ}, n int")
+        with pytest.raises(ValueError, match="cannot bucket"):
+            catalog.create_table("db.fbucket", df.schema, partition_by=[("f", "bucket[4]")])
+        t = catalog.create_table("db.fbucket2", df.schema)
+        with pytest.raises(ValueError, match="cannot bucket"):
+            t.set_partition_spec([("f", "bucket[4]")])
 
     @pytest.mark.parametrize(
         "spec",
