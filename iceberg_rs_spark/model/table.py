@@ -155,7 +155,7 @@ class TableMetadata:
         }
 
     def to_json_str(self) -> str:
-        return json.dumps(self.to_json(), indent=1)
+        return json.dumps(self.to_json())
 
     @staticmethod
     def from_json(obj: dict) -> "TableMetadata":

@@ -65,7 +65,7 @@ from typing import Iterable
 from urllib.parse import unquote
 
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -166,6 +166,9 @@ _POS_IDX = "__icelake_pos"
 _SEQ = "__icelake_seq"
 _DEL_SEQ = "__icelake_del_seq"
 _METADATA_FIELDS = {_POS_FP: "_metadata.file_path", _POS_IDX: "_metadata.row_index"}
+#: the columns of a position-delete file, read with this schema: a
+#: schema-less read runs a Spark schema-inference job per call
+_POS_DEL_SCHEMA = "file_path string, pos long"
 
 
 def _meta_select(cols: "list[str] | tuple[str, ...]") -> "list[Column]":
@@ -358,6 +361,10 @@ def _read_metadata(location: str) -> tuple[int, TableMetadata]:
 
 
 _TMP_SEQ = iter(range(1, 1 << 62))  # per-process unique temp suffixes
+#: predecessor versions a commit keeps in the metadata log (Iceberg's
+#: ``write.metadata.previous-versions-max`` default), so the metadata
+#: document stops growing with history
+_METADATA_LOG_MAX = 100
 
 
 def _fsync_dir(dirpath: str) -> None:
@@ -555,16 +562,18 @@ class Table:
         """Optimistic commit loop honoring commit.retry.num-retries
         (the property the reference's fixture pins, table.rs:148-150).
         Each attempt parses the latest metadata once and takes the
-        retry budget from that parse."""
+        retry budget from that parse. The metadata log keeps the newest
+        ``_METADATA_LOG_MAX`` predecessors."""
         failures = 0
         while True:
             v, md = _read_metadata(self.location)
             retries = int(md.properties.get("commit.retry.num-retries", "4"))
             new_md = updater(md)
+            log = md.metadata_log + (
+                MetadataLogEntry(_version_path(self.location, v), md.last_updated_ms),
+            )
             new_md = new_md.evolve(
-                last_updated_ms=_now_ms(),
-                metadata_log=md.metadata_log
-                + (MetadataLogEntry(_version_path(self.location, v), md.last_updated_ms),),
+                last_updated_ms=_now_ms(), metadata_log=log[-_METADATA_LOG_MAX:]
             )
             try:
                 _write_metadata_version(self.location, v + 1, new_md)
@@ -1391,18 +1400,25 @@ class Table:
             df = _cluster_for_write(base, cluster_by, strategy, n, zorder_bits)
         else:
             df = base.coalesce(n)
+        cache = getattr(df, "_icelake_zorder_cache", None)
         has_eq = any(e.content == "equality-deletes" for e in dels)
         if has_eq:
             # An equality-delete row may match 0..N data rows, so the
-            # manifest arithmetic below is unknowable — count the live
-            # rows for real (one extra scan; compaction is already a
-            # full-rewrite job, so this is noise at any scale).
-            before = base.count()
+            # manifest arithmetic below is unknowable: the write itself
+            # counts the live rows it consumes. A shuffle stage that
+            # re-runs can only over-count, so a miscount refuses the
+            # commit and never passes it silently. The count sits on the
+            # clustered frame, not on `base`: a range shuffle samples its
+            # input in a pass of its own, so below one every row counts
+            # twice.
+            observed = Observation("compact")
+            df = df.observe(observed, F.count(F.lit(1)).alias("rows"))
         new_entries = self._write_data_files(df, md)
-        cache = getattr(df, "_icelake_zorder_cache", None)
         if cache is not None:
             cache.unpersist()
-        if not has_eq:
+        if has_eq:
+            before = observed.get["rows"]
+        else:
             # Live rows = raw data rows minus applied delete positions
             # (positions are exact: the MOR writer never double-marks).
             before = sum(e.record_count for e in entries) - sum(
@@ -1622,7 +1638,8 @@ class Table:
             out = out.unionByName(p)
         if pos_dels:
             dels = (
-                self.spark.read.parquet(*[e.path for e in pos_dels])
+                self.spark.read.schema(_POS_DEL_SCHEMA)
+                .parquet(*[e.path for e in pos_dels])
                 .select(
                     F.col("file_path").alias(_POS_FP), F.col("pos").alias(_POS_IDX)
                 )
@@ -2382,14 +2399,14 @@ class Table:
             )
         # Which data files do the positions reference? file_path in a
         # delete file is the scan-time _metadata.file_path URI; entry
-        # paths are plain filesystem paths. Metadata-sized collect (one
-        # value per referenced file).
+        # paths are plain filesystem paths. The driver reads the
+        # file_path column itself, as _prune_dangling_position_deletes
+        # does, so this step runs no Spark job.
         referenced = {
-            _strip_file_scheme(r.file_path)
-            for r in self.spark.read.parquet(*[e.path for e in pos_dels])
-            .select("file_path")
-            .distinct()
-            .collect()
+            _strip_file_scheme(fp)
+            for e in pos_dels
+            for fp in pq.read_table(e.path, columns=["file_path"])
+            .column("file_path").unique().to_pylist()
         }
         targets = [e for e in _data_entries(all_entries) if e.path in referenced]
         if not targets:

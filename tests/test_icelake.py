@@ -999,6 +999,24 @@ class TestInspection:
         desc = t.describe()
         assert "ts_day: day" in desc and "event_id" in desc
 
+    def test_metadata_log_keeps_newest_previous_versions(
+        self, catalog, spark, monkeypatch
+    ):
+        """``_METADATA_LOG_MAX`` bounds the metadata log to the newest
+        predecessors, oldest first."""
+        from iceberg_rs_spark.sources import icelake as lake
+
+        monkeypatch.setattr(lake, "_METADATA_LOG_MAX", 3)
+        t = catalog.create_table("db.mlog", spark.range(1).schema)
+        for i in range(6):
+            t.set_properties(n=str(i))
+        v = lake._latest_version(t.location)
+        assert v == 7
+        assert [e.metadata_file for e in t.metadata.metadata_log] == [
+            lake._version_path(t.location, x) for x in range(v - 3, v)
+        ]
+        assert t.metadata_log_entries().count() == 3
+
     def test_describe_and_reload(self, catalog, spark, events_df):
         catalog.create_table("db.reload", events_df.schema).append(events_df.limit(5))
         t2 = catalog.load_table("db.reload")
@@ -1946,6 +1964,61 @@ class TestEqualityDeleteUpserts:
         after = t.to_df().orderBy("event_id").collect()
         assert after == before
         assert t.metadata.snapshots[-1].operation == "replace"
+
+    @pytest.mark.parametrize("strategy", ["bin-pack", "sort", "zorder"])
+    def test_compact_refuses_a_write_that_loses_rows(
+        self, catalog, spark, events_df, monkeypatch, strategy
+    ):
+        """With live equality deletes the live-row count is observed on
+        the rewrite's own write, for every layout. The exact count lets
+        a clean rewrite commit; an output file missing from the new
+        manifest makes the counts differ and the commit is refused."""
+        from iceberg_rs_spark.sources import icelake as lake
+
+        base = events_df.limit(60)
+        layout = {} if strategy == "bin-pack" else {
+            "cluster_by": ["user_id", "value"], "strategy": strategy
+        }
+
+        def upserted(name):
+            t = catalog.create_table(f"db.{name}_{strategy.replace('-', '_')}", base.schema)
+            t.append(base)
+            ids = [r.event_id for r in base.limit(6).collect()]
+            t.merge(self._upsert_src(spark, base, ids, 3.0), on=["event_id"],
+                    mode="merge-on-read")
+            assert t.files().where("content = 'equality-deletes'").count() > 0
+            return t
+
+        clean = upserted("eqcomp_ok")
+        rows = sorted(map(repr, clean.to_df().collect()))
+        clean.compact(**layout)
+        assert clean.metadata.snapshots[-1].operation == "replace"
+        assert sorted(map(repr, clean.to_df().collect())) == rows
+
+        t = upserted("eqcomp_lost")
+        snaps = len(t.metadata.snapshots)
+        collect = lake.Table._collect_files
+
+        def drop_one(self, *a, **k):
+            return collect(self, *a, **k)[1:]
+
+        monkeypatch.setattr(lake.Table, "_collect_files", drop_one)
+        with pytest.raises(RuntimeError, match="compaction changed record count"):
+            t.compact(**layout)
+        monkeypatch.undo()
+        assert len(t.metadata.snapshots) == snaps
+        assert t.to_df().count() == 60
+
+    def test_compact_after_every_row_is_upserted_away(self, catalog, spark):
+        """The observed count is exact on an empty rewrite too."""
+        df = spark.createDataFrame([(i, float(i)) for i in range(5)], "k long, v double")
+        t = catalog.create_table("db.eqcomp_empty", df.schema)
+        t.append(df)
+        t.merge(df.withColumn("v", F.col("v") + 1), on=["k"], mode="merge-on-read")
+        t.delete("k >= 0", mode="merge-on-read")
+        t.compact()
+        assert t.to_df().count() == 0
+        assert t.files().where("content != 'data'").count() == 0
 
     def test_time_travel_before_merge(self, catalog, spark, events_df):
         base = events_df.limit(25)

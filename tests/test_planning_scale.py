@@ -235,3 +235,25 @@ class TestInListPlanning:
         df, jobs = planning_jobs("v = 3", "plan-no-bucket")
         assert jobs == 0, jobs
         assert df.count() == len(range(3, 80, 7))
+
+
+class TestDeleteFilePlanning:
+    def test_position_delete_scan_plans_without_spark_jobs(self, spark, tmp_path):
+        """Position-delete files are read with their fixed schema, so a
+        scan over live position deletes issues no Spark job while it
+        plans: a schema-less read would run a schema-inference job.
+        Jobs are counted in a job group through the status tracker."""
+        catalog = Catalog(spark, str(tmp_path / "wh"))
+        df = spark.range(40).selectExpr("id", "id % 5 AS v")
+        t = catalog.create_table("db.posdel_plan", df.schema)
+        t.append(df)
+        assert t.delete("v = 1", mode="merge-on-read") == 8
+        assert t.files().where("content = 'position-deletes'").count() > 0
+        sc = spark.sparkContext
+        sc.setJobGroup("plan-pos-dels", "scan")
+        try:
+            out = t.scan()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup("plan-pos-dels")) == 0
+        assert sorted(r.id for r in out.collect()) == [i for i in range(40) if i % 5 != 1]
