@@ -38,6 +38,14 @@ the next metadata version) honoring the ``commit.retry.num-retries``
 table property — the exact property the reference's fixture carries
 (reference table.rs:148-150).
 
+Every data commit goes through one snapshot producer
+(``Table._produce``). The operation states the entries it adds, the
+files it removes and the manifest entries it read. On each attempt the
+producer re-reads the branch, runs one fixed set of conflict checks
+driven by those three, and writes the snapshot with its summary
+counts. Which concurrent change conflicts with which commit is decided
+there and nowhere else.
+
 Planning at metadata scale (measured, tests/test_planning_scale.py):
 each snapshot has one manifest document. A scan binds its ``where``
 once (`_bind_predicate`): each conjunct to its field in the read
@@ -61,7 +69,7 @@ import time
 import uuid
 from dataclasses import dataclass, field
 from datetime import date, datetime
-from typing import Iterable
+from typing import Callable, Iterable
 from urllib.parse import unquote
 
 import pyarrow.parquet as pq
@@ -117,7 +125,7 @@ class DataFileEntry:
     #: "delete files were added to delete rows", snapshot.rs:28-29)
     content: str = "data"
     #: data sequence number: stamped once at the commit that first adds
-    #: the entry (``_new_snapshot``); equality deletes apply only to
+    #: the entry (``Table._produce``); equality deletes apply only to
     #: entries with a STRICTLY smaller sequence, which is what lets an
     #: upsert commit its new rows and the delete of their old versions
     #: in one snapshot without the delete eating the new rows.
@@ -561,9 +569,13 @@ class Table:
     def _commit(self, updater) -> TableMetadata:
         """Optimistic commit loop honoring commit.retry.num-retries
         (the property the reference's fixture pins, table.rs:148-150).
-        Each attempt parses the latest metadata once and takes the
-        retry budget from that parse. The metadata log keeps the newest
-        ``_METADATA_LOG_MAX`` predecessors."""
+        Each attempt parses the latest metadata once, takes the retry
+        budget from that parse and hands it to ``updater``, which
+        returns the new document or raises to abort. Data commits pass
+        the updater ``_produce`` builds, whose conflict checks re-run
+        on every attempt; metadata-only commits (schema, spec, refs,
+        properties, expiry) pass their own. The metadata log keeps the
+        newest ``_METADATA_LOG_MAX`` predecessors."""
         failures = 0
         while True:
             v, md = _read_metadata(self.location)
@@ -755,83 +767,129 @@ class Table:
                 )
         return entries
 
-    def _new_snapshot(
-        self,
-        md: TableMetadata,
-        operation: str,
-        entries: list[DataFileEntry],
-        branch: str,
-        extra_summary: dict | None = None,
-    ) -> TableMetadata:
-        snap_id = uuid.uuid4().int >> 65  # 63-bit positive id
-        parent = None
-        if branch in md.refs:
-            parent = md.refs[branch].snapshot_id
-        elif branch == MAIN_BRANCH:
-            parent = md.current_snapshot_id
-        # Data sequence number: stamped once, at the commit that first
-        # adds an entry; entries carried forward from earlier snapshots
-        # keep theirs. Equality deletes apply only to strictly-smaller
-        # sequences, so ordering across commits is what makes the v2
-        # upsert (new rows + delete of their old versions in ONE
-        # snapshot) self-consistent.
-        seq = md.last_sequence_number + 1
-        entries = [
-            dataclasses.replace(e, sequence_number=seq)
-            if e.sequence_number is None
-            else e
-            for e in entries
-        ]
-        manifest = self._write_manifest(snap_id, entries)
-        snap = Snapshot(
-            snapshot_id=snap_id,
-            parent_snapshot_id=parent,
-            sequence_number=md.last_sequence_number + 1,
-            timestamp_ms=_now_ms(),
-            manifest_list=manifest,
-            summary={
-                "operation": operation,
-                "total-data-files": str(len(entries)),
-                "total-records": str(sum(e.record_count for e in entries)),
-                **(extra_summary or {}),
-            },
-            schema_id=md.current_schema_id,
-        )
-        refs = dict(md.refs)
-        old_ref = refs.get(branch)
-        refs[branch] = Reference(
-            snapshot_id=snap_id,
-            type="branch",
-            min_snapshots_to_keep=old_ref.min_snapshots_to_keep if old_ref else None,
-            max_snapshot_age_ms=old_ref.max_snapshot_age_ms if old_ref else None,
-            max_ref_age_ms=old_ref.max_ref_age_ms if old_ref else None,
-        )
-        return md.evolve(
-            last_sequence_number=snap.sequence_number,
-            current_snapshot_id=snap_id if branch == MAIN_BRANCH else md.current_snapshot_id,
-            snapshots=md.snapshots + (snap,),
-            # The snapshot log is the TIMESTAMP AS OF index — "when did
-            # MAIN change". Side-branch commits leave main untouched;
-            # logging them would resolve time travel to snapshots that
-            # were never current (Iceberg's snapshot-log has the same
-            # main-only rule).
-            snapshot_log=(
-                md.snapshot_log + (SnapshotLogEntry(snap_id, snap.timestamp_ms),)
-                if branch == MAIN_BRANCH
-                else md.snapshot_log
-            ),
-            refs=refs,
-        )
-
     def _current_entries(self, md: TableMetadata, branch: str = MAIN_BRANCH) -> list[DataFileEntry]:
-        head = None
-        if branch in md.refs:
-            head = md.refs[branch].snapshot_id
-        elif branch == MAIN_BRANCH:
-            head = md.current_snapshot_id
-        if head is None:
-            return []
-        return self._read_manifest(md.snapshot_by_id(head))
+        head = _head(md, branch)
+        return [] if head is None else self._read_manifest(md.snapshot_by_id(head))
+
+    def _produce(
+        self,
+        op: str,
+        operation: str,
+        branch: str,
+        added: "list[DataFileEntry]",
+        removes: "set[str] | Callable[[DataFileEntry], bool]" = frozenset(),
+        read: "list[DataFileEntry]" = (),
+        no_new_data: bool = False,
+        summary: dict | None = None,
+    ) -> None:
+        """The one snapshot producer: every data commit is a snapshot
+        of ``operation`` that adds the ``added`` entries and drops the
+        entries ``removes`` names — a path set, or a rule applied to
+        the branch's entries at commit time. Every attempt starts from
+        the branch as it is then, so a concurrent commit that won the
+        version race survives (snapshot isolation). ``read`` are the
+        manifest entries the operation read to build ``added``; the
+        same four checks run on every commit, in order:
+
+        (a) every data file in ``read`` is still live. A concurrent
+            rewrite of a file this commit rewrites would resurrect the
+            rows it deleted; positions into a replaced file delete
+            nothing.
+        (b) if the commit drops a file it read, no delete file appeared
+            since the read. A rewrite applied the delete files it read;
+            one added since would be undone with the files it points
+            into. One that left since went with the data files it
+            points into, and if this commit read any of those, (a)
+            refuses it.
+        (c) with ``no_new_data`` — the output was computed from every
+            row of the branch — no data file appeared since the read.
+        (d) no added path is live already: its rows would count twice.
+
+        (a)-(c) raise CommitConflict naming ``op``; (d) is a
+        ValueError, since retrying cannot fix it. Position deletes left
+        dangling by dropped data files are pruned. The summary carries
+        the added and total counts of data files, delete files and
+        records around the operation's own ``summary`` keys.
+
+        Entries first added here get this commit's data sequence
+        number; entries carried forward keep theirs. Equality deletes
+        apply only to strictly smaller sequences, which is what lets an
+        upsert commit new rows and the delete of their old versions in
+        one snapshot."""
+        drops = removes if callable(removes) else (lambda e: e.path in removes)
+        read_paths = {e.path for e in read}
+        read_data = {e.path for e in read if e.content == "data"}
+
+        def conflict(what: str) -> CommitConflict:
+            return CommitConflict(
+                f"{op} on {self.identifier} conflicts with a concurrent {what}; "
+                "re-run against fresh metadata"
+            )
+
+        def updater(cur: TableMetadata) -> TableMetadata:
+            live = self._current_entries(cur, branch)
+            paths = {e.path for e in live}
+            vanished = read_data - paths
+            if vanished:
+                raise conflict(f"rewrite of {len(vanished)} file(s) it read")
+            dropped = [e for e in live if drops(e)]
+            unapplied = {e.path for e in _delete_file_entries(live)} - read_paths
+            if unapplied and read_paths & {e.path for e in dropped}:
+                raise conflict(
+                    f"merge-on-read delete: {len(unapplied)} delete file(s) it did not apply"
+                )
+            appeared = {e.path for e in _data_entries(live)} - read_data
+            if no_new_data and appeared:
+                raise conflict(f"write of {len(appeared)} data file(s)")
+            dupes = paths & {e.path for e in added}
+            if dupes:
+                raise ValueError(
+                    f"{op}: {len(dupes)} path(s) already registered in "
+                    f"{self.identifier}: {sorted(dupes)[:3]}"
+                )
+            kept = self._prune_dangling_position_deletes(
+                [e for e in live if not drops(e)],
+                {e.path for e in _data_entries(dropped)},
+            )
+            seq = cur.last_sequence_number + 1
+            new = [
+                dataclasses.replace(e, sequence_number=seq)
+                if e.sequence_number is None
+                else e
+                for e in added
+            ]
+            entries = kept + new
+            new_data, data = _data_entries(new), _data_entries(entries)
+            counts = {
+                "added-data-files": len(new_data),
+                "added-records": sum(e.record_count for e in new_data),
+                "added-delete-files": len(new) - len(new_data),
+            }
+            snap_id = uuid.uuid4().int >> 65  # 63-bit positive id
+            snap = Snapshot(
+                snapshot_id=snap_id,
+                parent_snapshot_id=_head(cur, branch),
+                sequence_number=seq,
+                timestamp_ms=_now_ms(),
+                manifest_list=self._write_manifest(snap_id, entries),
+                summary={
+                    "operation": operation,
+                    **{k: str(v) for k, v in counts.items() if v},
+                    **(summary or {}),
+                    "total-data-files": str(len(data)),
+                    "total-delete-files": str(len(entries) - len(data)),
+                    "total-records": str(sum(e.record_count for e in data)),
+                },
+                schema_id=cur.current_schema_id,
+            )
+            return _move_branch(
+                cur.evolve(last_sequence_number=seq, snapshots=cur.snapshots + (snap,)),
+                branch,
+                snap_id,
+                snap.timestamp_ms,
+            )
+
+        self._commit(updater)
 
     # public write API (snapshot operations per reference snapshot.rs:14-31)
 
@@ -844,54 +902,26 @@ class Table:
         """``append``: only data files added (snapshot.rs:19).
         ``extra_summary`` entries are recorded in the snapshot summary
         (e.g. a streaming micro-batch id for idempotent re-delivery)."""
-        md = self.metadata
-        new_entries = self._write_data_files(df, md)
-
-        def updater(cur: TableMetadata) -> TableMetadata:
-            entries = self._current_entries(cur, branch) + new_entries
-            return self._new_snapshot(
-                cur, "append", entries, branch,
-                {"added-data-files": str(len(new_entries)),
-                 "added-records": str(sum(e.record_count for e in new_entries)),
-                 **(extra_summary or {})},
-            )
-
-        self._commit(updater)
+        new_entries = self._write_data_files(df, self.metadata)
+        self._produce("append", "append", branch, new_entries, summary=extra_summary)
 
     def overwrite(self, df: DataFrame, branch: str = MAIN_BRANCH) -> None:
         """``overwrite``: logical overwrite of the whole table
         (snapshot.rs:27; INSERT OVERWRITE semantics)."""
-        md = self.metadata
-        new_entries = self._write_data_files(df, md)
-        self._commit(lambda cur: self._new_snapshot(cur, "overwrite", new_entries, branch))
+        new_entries = self._write_data_files(df, self.metadata)
+        self._produce("overwrite", "overwrite", branch, new_entries, removes=lambda e: True)
 
     def overwrite_partitions(self, df: DataFrame, branch: str = MAIN_BRANCH) -> None:
         """Dynamic partition overwrite: replaces exactly the partitions
         present in ``df`` (writeTo(t).overwritePartitions())."""
-        md = self.metadata
-        new_entries = self._write_data_files(df, md)
+        new_entries = self._write_data_files(df, self.metadata)
         touched = {tuple(sorted(e.partition.items())) for e in new_entries}
-
-        def updater(cur: TableMetadata) -> TableMetadata:
-            cur_entries = self._current_entries(cur, branch)
-            kept = [
-                e
-                for e in cur_entries
-                if tuple(sorted(e.partition.items())) not in touched
-            ]
-            # Unscoped position-delete files (empty partition) survive
-            # the partition filter but may reference data files in the
-            # replaced partitions — prune those dangling positions.
-            removed = {
-                e.path
-                for e in cur_entries
-                if e.content == "data"
-                and tuple(sorted(e.partition.items())) in touched
-            }
-            kept = self._prune_dangling_position_deletes(kept, removed)
-            return self._new_snapshot(cur, "overwrite", kept + new_entries, branch)
-
-        self._commit(updater)
+        # Unscoped delete files (empty partition) stay; the producer
+        # prunes their positions into the replaced partitions.
+        self._produce(
+            "overwrite_partitions", "overwrite", branch, new_entries,
+            removes=lambda e: tuple(sorted(e.partition.items())) in touched,
+        )
 
     def delete(
         self, where: str, branch: str = MAIN_BRANCH, mode: str = "copy-on-write"
@@ -917,7 +947,6 @@ class Table:
         md = self.metadata
         all_entries = self._current_entries(md, branch)
         base_dels = _delete_file_entries(all_entries)
-        base_del_paths = {e.path for e in base_dels}
         # Metadata-only fast path (Iceberg's partition-aligned DELETE):
         # a file whose stats PROVE every row matches is dropped from
         # the snapshot without being read or rewritten — at 100 TB,
@@ -953,56 +982,22 @@ class Table:
             after = sum(e.record_count for e in rewritten)
             deleted += before - after
 
-        def updater(cur: TableMetadata) -> TableMetadata:
-            # Recompute the kept set from `cur` on every (re)try: a
-            # concurrent append that wins the race must survive the
-            # commit (snapshot isolation — the delete applies to the
-            # files it read; later files are kept untouched).
-            cur_entries = self._current_entries(cur, branch)
-            cur_paths = {e.path for e in cur_entries}
-            # Conflict validation (Iceberg's validateDataFilesExist):
-            # if a concurrent compact/delete/overwrite rewrote any of
-            # the files this delete read, committing would resurrect
-            # the deleted rows (the rewritten replacements still hold
-            # them) AND duplicate the kept rows via `rewritten`. Fail
-            # the commit so the caller re-runs on fresh metadata.
-            vanished = candidate_paths - cur_paths
-            if vanished:
-                raise CommitConflict(
-                    f"delete on {self.identifier} conflicts with a concurrent "
-                    f"rewrite of {len(vanished)} input file(s); re-run against "
-                    "fresh metadata"
-                )
-            # A concurrent merge-on-read delete added delete files this
-            # rewrite did not apply — committing would resurrect those
-            # rows inside the rewritten candidates.
-            cur_del_paths = {e.path for e in _delete_file_entries(cur_entries)}
-            if cur_del_paths != base_del_paths:
-                raise CommitConflict(
-                    f"delete on {self.identifier} conflicts with a concurrent "
-                    "merge-on-read delete; re-run against fresh metadata"
-                )
-            untouched = [e for e in cur_entries if e.path not in candidate_paths]
-            untouched = self._prune_dangling_position_deletes(
-                untouched, candidate_paths
-            )
-            summary = {"deleted-records": str(deleted)}
-            if dropped_meta_only:
-                summary["deleted-files-metadata-only"] = str(dropped_meta_only)
-            return self._new_snapshot(
-                cur, "delete", untouched + rewritten, branch, summary
-            )
-
-        self._commit(updater)
+        summary = {"deleted-records": str(deleted)}
+        if dropped_meta_only:
+            summary["deleted-files-metadata-only"] = str(dropped_meta_only)
+        self._produce(
+            "delete", "delete", branch, rewritten, removes=candidate_paths,
+            read=candidates + full + base_dels, summary=summary,
+        )
         return deleted
 
     def _prune_dangling_position_deletes(
         self, entries: "list[DataFileEntry]", removed_paths: "set[str]"
     ) -> "list[DataFileEntry]":
         """Drop or rewrite position-delete entries whose rows reference
-        data files a copy-on-write rewrite just removed. The rewrite
-        applied those deletes before writing its replacements, so the
-        surviving positions are dangling: reads ignore them (the path
+        data files the commit removes. A rewrite applied those deletes
+        before writing its replacements, and an overwrite replaced the
+        rows, so the surviving positions are dangling: reads ignore them (the path
         join finds no file), but compact() / rewrite_position_deletes()
         count their record_count against files that no longer carry
         those rows and fail their record-count invariants. A delete
@@ -1053,7 +1048,6 @@ class Table:
         candidates, _ = _split_by_predicate(_data_entries(all_entries), where, md, self)
         if not candidates:
             return 0
-        candidate_paths = {e.path for e in candidates}
         # Positions of LIVE matching rows only (existing deletes
         # applied), so delete files never hold duplicate positions and
         # `deleted-records` counts stay exact.
@@ -1074,28 +1068,13 @@ class Table:
         if deleted == 0:
             return 0
 
-        def updater(cur: TableMetadata) -> TableMetadata:
-            cur_entries = self._current_entries(cur, branch)
-            cur_paths = {e.path for e in cur_entries}
-            # Positions are bound to specific file paths: if a
-            # concurrent rewrite replaced a target file, these
-            # positions no longer apply to anything — conflict.
-            # Concurrent merge-on-read deletes COMMUTE (independent
-            # delete files union at read time), so they pass.
-            vanished = candidate_paths - cur_paths
-            if vanished:
-                raise CommitConflict(
-                    f"merge-on-read delete on {self.identifier} conflicts with "
-                    f"a concurrent rewrite of {len(vanished)} target file(s); "
-                    "re-run against fresh metadata"
-                )
-            return self._new_snapshot(
-                cur, "delete", cur_entries + new_dels, branch,
-                {"deleted-records": str(deleted),
-                 "added-delete-files": str(len(new_dels))},
-            )
-
-        self._commit(updater)
+        # Positions are bound to the candidates' paths: a concurrent
+        # rewrite of one conflicts. Concurrent merge-on-read deletes
+        # commute (delete files union at read time).
+        self._produce(
+            "merge-on-read delete", "delete", branch, new_dels,
+            read=candidates + base_dels, summary={"deleted-records": str(deleted)},
+        )
         return deleted
 
     def merge(
@@ -1154,23 +1133,13 @@ class Table:
             ]
         )
         new_entries = self._write_data_files(merged, md)
-        base_paths = {e.path for e in self._current_entries(md, branch)}
-
-        def updater(cur: TableMetadata) -> TableMetadata:
-            # MERGE rewrote the whole table from the snapshot it read;
-            # committing over a concurrently-changed entry set would
-            # silently drop the concurrent writer's rows (or resurrect
-            # its deletes). Real Iceberg fails such commits with a
-            # validation exception — so do we.
-            cur_paths = {e.path for e in self._current_entries(cur, branch)}
-            if cur_paths != base_paths:
-                raise CommitConflict(
-                    f"merge on {self.identifier} conflicts with a concurrent "
-                    "write; re-run against fresh metadata"
-                )
-            return self._new_snapshot(cur, "overwrite", new_entries, branch)
-
-        self._commit(updater)
+        # MERGE rewrote the whole table from the snapshot it read: any
+        # concurrent change to it would drop the concurrent writer's
+        # rows or resurrect its deletes.
+        self._produce(
+            "merge", "overwrite", branch, new_entries, removes=lambda e: True,
+            read=self._current_entries(md, branch), no_new_data=True,
+        )
 
     def _merge_merge_on_read(
         self,
@@ -1232,23 +1201,16 @@ class Table:
             delete_dir, md, content="equality-deletes", equality_ids=tuple(fids)
         )
 
-        def updater(cur: TableMetadata) -> TableMetadata:
-            # Equality deletes COMMUTE with concurrent appends, other
-            # merge-on-read upserts, and copy-on-write rewrites: the
-            # sequence number is (re)assigned at commit time, so this
-            # delete applies to every entry committed before it —
-            # including files a concurrent compact/delete rewrote —
-            # and never to its own batch. No path-based conflict
-            # exists; just stack on whatever is current.
-            cur_entries = self._current_entries(cur, branch)
-            return self._new_snapshot(
-                cur, "overwrite", cur_entries + new_data + eq_entries, branch,
-                {"added-delete-files": str(len(eq_entries)),
-                 "equality-field-ids": json.dumps(fids),
-                 **(extra_summary or {})},
-            )
-
-        self._commit(updater)
+        # Equality deletes COMMUTE with concurrent appends, other
+        # merge-on-read upserts, and copy-on-write rewrites: the
+        # sequence number is (re)assigned at commit time, so this
+        # delete applies to every entry committed before it —
+        # including files a concurrent compact/delete rewrote — and
+        # never to its own batch. It read nothing, so nothing conflicts.
+        self._produce(
+            "merge-on-read merge", "overwrite", branch, new_data + eq_entries,
+            summary={"equality-field-ids": json.dumps(fids), **(extra_summary or {})},
+        )
 
     def add_files(
         self,
@@ -1328,25 +1290,10 @@ class Table:
                 )
             )
 
-        def updater(cur: TableMetadata) -> TableMetadata:
-            cur_entries = self._current_entries(cur, branch)
-            # Re-registering a path already in the snapshot would
-            # double-count its rows on every subsequent read.
-            dupes = {e.path for e in cur_entries} & {e.path for e in new_entries}
-            if dupes:
-                raise ValueError(
-                    f"add_files: {len(dupes)} path(s) already registered in "
-                    f"{self.identifier}: {sorted(dupes)[:3]}"
-                )
-            entries = cur_entries + new_entries
-            return self._new_snapshot(
-                cur, "append", entries, branch,
-                {"added-data-files": str(len(new_entries)),
-                 "added-records": str(sum(e.record_count for e in new_entries)),
-                 "registered-via": "name-mapping"},
-            )
-
-        self._commit(updater)
+        self._produce(
+            "add_files", "append", branch, new_entries,
+            summary={"registered-via": "name-mapping"},
+        )
         return len(new_entries)
 
     def compact(
@@ -1427,60 +1374,15 @@ class Table:
         after = sum(e.record_count for e in new_entries)
         if before != after:
             raise RuntimeError(f"compaction changed record count: {before} -> {after}")
-        self._commit_replace(
-            "compact", branch, {e.path for e in entries}, {e.path for e in dels},
-            new_entries,
-            {"rewritten-data-files": str(len(entries)),
-             "materialized-delete-files": str(len(dels)),
-             "rewrite-strategy": strategy if cluster_by else "bin-pack",
-             **({"cluster-by": ",".join(cluster_by)} if cluster_by else {})},
+        # "replace": data unchanged, so a concurrent append survives.
+        self._produce(
+            "compact", "replace", branch, new_entries,
+            removes={e.path for e in all_entries}, read=all_entries,
+            summary={"rewritten-data-files": str(len(entries)),
+                     "materialized-delete-files": str(len(dels)),
+                     "rewrite-strategy": strategy if cluster_by else "bin-pack",
+                     **({"cluster-by": ",".join(cluster_by)} if cluster_by else {})},
         )
-
-    def _commit_replace(
-        self,
-        op: str,
-        branch: str,
-        input_paths: "set[str]",
-        base_del_paths: "set[str]",
-        new_entries: "list[DataFileEntry]",
-        summary: dict,
-    ) -> None:
-        """Commit a ``replace`` snapshot that swaps the rewritten data
-        files ``input_paths`` and the delete files ``base_del_paths``
-        the rewrite applied for ``new_entries``.
-
-        The kept set is recomputed from `cur` on every (re)try, so a
-        concurrent append that wins the version race survives
-        ("replace" means data unchanged — dropping the appended files
-        would be silent data loss). If any input file is gone from
-        `cur` (a concurrent delete/overwrite rewrote it), committing
-        would resurrect its old rows; if a concurrent merge-on-read
-        delete added a delete file, the rewrite did not apply it and
-        dropping the inputs would undo that delete. Both conflict."""
-
-        def updater(cur: TableMetadata) -> TableMetadata:
-            cur_entries = self._current_entries(cur, branch)
-            vanished = input_paths - {e.path for e in cur_entries}
-            if vanished:
-                raise CommitConflict(
-                    f"{op} on {self.identifier} conflicts with a concurrent "
-                    f"rewrite of {len(vanished)} input file(s); re-run against "
-                    "fresh metadata"
-                )
-            cur_del_paths = {e.path for e in _delete_file_entries(cur_entries)}
-            if cur_del_paths - base_del_paths:
-                raise CommitConflict(
-                    f"{op} on {self.identifier} conflicts with a concurrent "
-                    "merge-on-read delete; re-run against fresh metadata"
-                )
-            kept = [
-                e
-                for e in cur_entries
-                if e.path not in input_paths and e.path not in base_del_paths
-            ]
-            return self._new_snapshot(cur, "replace", kept + new_entries, branch, summary)
-
-        self._commit(updater)
 
     # -- read path -----------------------------------------------------
 
@@ -1948,68 +1850,25 @@ class Table:
         def updater(md: TableMetadata) -> TableMetadata:
             if source_ref not in md.refs:
                 raise KeyError(f"unknown ref: {source_ref}")
-            src_head = md.refs[source_ref].snapshot_id
-            cur_ref = md.refs.get(branch)
-            if cur_ref is not None:
-                cur_head = cur_ref.snapshot_id
-            elif branch == MAIN_BRANCH:
-                cur_head = md.current_snapshot_id
-            else:
+            if branch not in md.refs and branch != MAIN_BRANCH:
                 raise KeyError(f"unknown branch: {branch}")
-            sid, ok = src_head, cur_head is None
-            by_id = {s.snapshot_id: s for s in md.snapshots}
-            while sid is not None and not ok:
-                if sid == cur_head:
-                    ok = True
-                    break
-                # A retained snapshot may point at a parent removed by
-                # expire_snapshots; a missing ancestor ends the chain
-                # (→ diverged), it must not crash the walk.
-                snap = by_id.get(sid)
-                sid = snap.parent_snapshot_id if snap is not None else None
-            if not ok:
+            src_head, cur_head = md.refs[source_ref].snapshot_id, _head(md, branch)
+            if cur_head is not None and all(
+                s.snapshot_id != cur_head for s in _ancestors(md, src_head)
+            ):
                 raise ValueError(
                     f"cannot fast-forward {branch!r} to {source_ref!r}: "
                     f"{branch!r} has diverged (its head is not an ancestor "
                     "of the source head)"
                 )
-            refs = dict(md.refs)
-            refs[branch] = Reference(
-                snapshot_id=src_head,
-                type="branch",
-                min_snapshots_to_keep=cur_ref.min_snapshots_to_keep if cur_ref else None,
-                max_snapshot_age_ms=cur_ref.max_snapshot_age_ms if cur_ref else None,
-                max_ref_age_ms=cur_ref.max_ref_age_ms if cur_ref else None,
-            )
-            # The snapshot log is the TIMESTAMP AS OF index — "when did
-            # MAIN change". A side-branch fast-forward leaves main
-            # untouched; logging it would make time travel resolve to
-            # a snapshot that was never current.
-            return md.evolve(
-                refs=refs,
-                current_snapshot_id=(
-                    src_head if branch == MAIN_BRANCH else md.current_snapshot_id
-                ),
-                snapshot_log=(
-                    md.snapshot_log + (SnapshotLogEntry(src_head, _now_ms()),)
-                    if branch == MAIN_BRANCH
-                    else md.snapshot_log
-                ),
-            )
+            return _move_branch(md, branch, src_head, _now_ms())
 
         self._commit(updater)
 
     def rollback_to_snapshot(self, snapshot_id: int) -> None:
         def updater(md: TableMetadata) -> TableMetadata:
             md.snapshot_by_id(snapshot_id)  # must exist
-            refs = dict(md.refs)
-            if MAIN_BRANCH in refs:
-                refs[MAIN_BRANCH] = Reference(snapshot_id=snapshot_id, type="branch")
-            return md.evolve(
-                current_snapshot_id=snapshot_id,
-                refs=refs,
-                snapshot_log=md.snapshot_log + (SnapshotLogEntry(snapshot_id, _now_ms()),),
-            )
+            return _move_branch(md, MAIN_BRANCH, snapshot_id, _now_ms())
 
         self._commit(updater)
 
@@ -2114,17 +1973,10 @@ class Table:
                     # walk ancestry honoring min_snapshots_to_keep / age
                     min_keep = ref.min_snapshots_to_keep or 1
                     max_age = ref.max_snapshot_age_ms
-                    sid, count = ref.snapshot_id, 0
-                    while sid is not None:
-                        try:
-                            s = md.snapshot_by_id(sid)
-                        except KeyError:
-                            break
+                    for count, s in enumerate(_ancestors(md, ref.snapshot_id)):
                         age = now - s.timestamp_ms
                         if count < min_keep or (max_age is not None and age <= max_age):
-                            keep.add(sid)
-                        count += 1
-                        sid = s.parent_snapshot_id
+                            keep.add(s.snapshot_id)
             if md.current_snapshot_id is not None:
                 keep.add(md.current_snapshot_id)
             ordered = sorted(md.snapshots, key=lambda s: s.sequence_number)
@@ -2197,76 +2049,68 @@ class Table:
                     f"snapshot ({snap.snapshot_id}); only append snapshots "
                     "can be consumed incrementally"
                 )
-        added: list[DataFileEntry] = []
+        schema = md.current_schema()
+        if start_snapshot_id is None:
+            # Whole-history range of appends and replaces: the end
+            # state holds every row added in it (a replace moves rows,
+            # never changes them), so no commit attribution is needed
+            # and unstamped (foreign-manifest) entries are fine here.
+            # It is also the only answer once expire_snapshots has cut
+            # the chain short.
+            entries = self._read_manifest(md.snapshot_by_id(end))
+            return self._read_entries_as(
+                md, _data_entries(entries), schema,
+                delete_entries=_delete_file_entries(entries),
+            )
         if chain and all(s.operation == "append" for s in chain):
             # Fast path (the common refresh loop): every commit in the
             # range is an append, so the END manifest alone holds every
             # file added in the range, each stamped with its adding
             # commit's sequence number (stamped once at first add,
-            # carried forward unchanged — _new_snapshot). ONE manifest
-            # read for the whole range instead of two full-manifest
-            # reads (own + parent) per commit — the O(delta) refresh
-            # VERDICT r4 #5 asks for.
-            start_seq = (
-                md.snapshot_by_id(start_snapshot_id).sequence_number
-                if start_snapshot_id is not None
-                else 0
-            )
+            # carried forward unchanged — _produce). ONE manifest read
+            # for the whole range instead of one per commit.
+            start_seq = md.snapshot_by_id(start_snapshot_id).sequence_number
             entries = self._read_manifest(md.snapshot_by_id(end))
-            if start_seq == 0:
-                # Whole-table range: every entry in the end manifest is
-                # part of the delta — no commit attribution needed, so
-                # unstamped (foreign-manifest) entries are fine here.
-                return self._read_entries_as(md, entries, md.current_schema())
             if any(not e.sequence_number for e in entries):
                 # A foreign/hand-written manifest whose entries lack
                 # per-file sequence numbers (DataFileEntry.from_json
                 # defaults to 0) cannot attribute files to commits —
                 # filtering would silently DROP those files from the
-                # delta (ADVICE r5). No fallback can recover the
-                # attribution (the per-snapshot path needs the same
-                # stamps), so fail loudly instead of returning an
-                # incomplete delta. Valid commit sequence numbers start
-                # at 1 (_commit: last_sequence_number + 1).
+                # delta (ADVICE r5). Valid commit sequence numbers
+                # start at 1, so fail loudly instead.
                 raise ValueError(
                     "incremental scan: end-manifest entries missing "
                     "per-file sequence numbers; cannot attribute files "
                     "to commits in the range — delta would be incomplete"
                 )
-            added = [e for e in entries if (e.sequence_number or 0) > start_seq]
+            added = [e for e in entries if e.sequence_number > start_seq]
         else:
             # A compaction inside the range rewrote earlier appends'
             # files (with fresh sequence numbers), so the end manifest
-            # no longer distinguishes range-added rows — read each
-            # append's OWN manifest, where its additions are exactly
-            # the entries stamped with that commit's sequence number
-            # (still no parent-manifest diff). `replace` snapshots are
-            # skipped: compaction moves bytes, not data — the "allows
-            # certain snapshots to be skipped" note on the reference's
-            # Operation enum (snapshot.rs:16-31).
-            for snap in reversed(chain):
-                if snap.operation == "replace":
-                    continue
-                own = self._read_manifest(snap)
-                if any(not e.sequence_number for e in own):
-                    # Same silent-data-loss class as the fast path: an
-                    # unstamped entry (foreign manifests deserialize
-                    # sequence_number to 0) can never equal the
-                    # commit's sequence number (>= 1), so the filter
-                    # below would drop it from the delta without a
-                    # trace. Fail loudly instead.
-                    raise ValueError(
-                        "incremental scan: manifest entries of snapshot "
-                        f"{snap.snapshot_id} missing per-file sequence "
-                        "numbers; cannot attribute files to commits in "
-                        "the range — delta would be incomplete"
-                    )
-                added.extend(
-                    e
-                    for e in own
-                    if e.sequence_number == snap.sequence_number
-                )
-        return self._read_entries_as(md, added, md.current_schema())
+            # no longer distinguishes range-added rows — take each
+            # append's additions from its OWN manifest. `replace`
+            # snapshots are skipped: compaction moves bytes, not data.
+            added = [
+                e for snap in reversed(chain)
+                if snap.operation != "replace"
+                for e in self._added_by(snap)
+            ]
+        return self._read_entries_as(md, added, schema)
+
+    def _added_by(self, snap: Snapshot) -> list[DataFileEntry]:
+        """The entries ``snap`` added: those of its own manifest stamped
+        with its sequence number. An unstamped entry (foreign manifests
+        deserialize sequence_number to 0) can never equal a commit's
+        sequence number (>= 1) and would vanish from the delta without
+        a trace, so it fails loudly instead."""
+        own = self._read_manifest(snap)
+        if any(not e.sequence_number for e in own):
+            raise ValueError(
+                f"manifest entries of snapshot {snap.snapshot_id} missing "
+                "per-file sequence numbers; cannot attribute files to the "
+                "commit that added them — delta would be incomplete"
+            )
+        return [e for e in own if e.sequence_number == snap.sequence_number]
 
     def changelog_scan(
         self,
@@ -2282,18 +2126,21 @@ class Table:
 
         Per snapshot:
 
-        * ``append`` — the added data files ARE the inserts; read them
-          directly (no diff, cost proportional to added data only).
+        * ``append`` — the added data files ARE the inserts: the
+          entries of its own manifest stamped with its sequence number,
+          read directly (no diff, no parent, cost proportional to
+          added data only).
           Older equality deletes cannot touch them (row sequence >=
           every existing delete's sequence), so a raw read is exact.
         * ``replace`` — skipped: compaction rewrites files without
           changing data (the reference Operation enum's "allows
           certain snapshots to be skipped" note).
         * anything else (``delete``/``overwrite``, CoW or MoR) — exact
-          state diff: ``state(snap) EXCEPT ALL state(parent)`` are the
-          inserts, the reverse are the deletes. Set difference is the
-          only exact answer for copy-on-write commits (no row lineage
-          exists); for MoR deletes it reduces to the delete-file rows
+          state diff against its parent (a ValueError if
+          expire_snapshots removed the parent): ``state(snap) EXCEPT
+          ALL state(parent)`` are the inserts, the reverse are the
+          deletes. Set difference is the only exact answer for
+          copy-on-write commits (no row lineage exists); for MoR deletes it reduces to the delete-file rows
           because both states share the same data files. Each state is
           a delete-applied scan, so the diff is 2 scans + 1 shuffle
           per non-append snapshot — changelog generation over an
@@ -2314,6 +2161,7 @@ class Table:
         if end is None:
             return _tagged_empty()
         chain = _ancestry(md, end, start_snapshot_id)
+        by_id = {s.snapshot_id: s for s in md.snapshots}
 
         def _state(snap: "Snapshot | None") -> DataFrame:
             if snap is None:
@@ -2338,25 +2186,19 @@ class Table:
                     .withColumn("_commit_snapshot_id", F.lit(_s.snapshot_id))
                 )
 
-            parent = (
-                md.snapshot_by_id(snap.parent_snapshot_id)
-                if snap.parent_snapshot_id is not None
-                else None
-            )
             if snap.operation == "append":
-                parent_paths = (
-                    {e.path for e in self._read_manifest(parent)} if parent else set()
-                )
-                added = [
-                    e
-                    for e in _data_entries(self._read_manifest(snap))
-                    if e.path not in parent_paths
-                ]
+                added = _data_entries(self._added_by(snap))
                 frames.append(_tag(self._read_entries_as(md, added, schema), "insert"))
-            else:
-                cur_state, prev_state = _state(snap), _state(parent)
-                frames.append(_tag(cur_state.exceptAll(prev_state), "insert"))
-                frames.append(_tag(prev_state.exceptAll(cur_state), "delete"))
+                continue
+            pid = snap.parent_snapshot_id
+            if pid is not None and pid not in by_id:
+                raise ValueError(
+                    f"changelog scan: the parent of {snap.operation!r} snapshot "
+                    f"{snap.snapshot_id} was expired; its changes cannot be diffed"
+                )
+            cur_state, prev_state = _state(snap), _state(by_id.get(pid))
+            frames.append(_tag(cur_state.exceptAll(prev_state), "insert"))
+            frames.append(_tag(prev_state.exceptAll(cur_state), "delete"))
         if not frames:
             return _tagged_empty()
         out = frames[0]
@@ -2423,11 +2265,11 @@ class Table:
             raise RuntimeError(
                 f"position-delete rewrite changed record count: {before} -> {after}"
             )
-        self._commit_replace(
-            "rewrite_position_deletes", branch, {e.path for e in targets},
-            {e.path for e in pos_dels}, new_entries,
-            {"rewritten-data-files": str(len(targets)),
-             "removed-delete-files": str(len(pos_dels))},
+        self._produce(
+            "rewrite_position_deletes", "replace", branch, new_entries,
+            removes={e.path for e in targets + pos_dels}, read=targets + pos_dels,
+            summary={"rewritten-data-files": str(len(targets)),
+                     "removed-delete-files": str(len(pos_dels))},
         )
         return len(targets)
 
@@ -2456,14 +2298,7 @@ class Table:
 
     def history(self) -> DataFrame:
         md = self.metadata
-        ancestors = set()
-        sid = md.current_snapshot_id
-        while sid is not None:
-            ancestors.add(sid)
-            try:
-                sid = md.snapshot_by_id(sid).parent_snapshot_id
-            except KeyError:
-                break
+        ancestors = {s.snapshot_id for s in _ancestors(md, md.current_snapshot_id)}
         rows = [
             (
                 datetime.utcfromtimestamp(e.timestamp_ms / 1000),
@@ -2576,21 +2411,59 @@ class Table:
 # ---------------------------------------------------------------------------
 
 
+def _head(md: TableMetadata, branch: str) -> int | None:
+    """The snapshot id ``branch`` points at; None before its first commit."""
+    if branch in md.refs:
+        return md.refs[branch].snapshot_id
+    return md.current_snapshot_id if branch == MAIN_BRANCH else None
+
+
+def _move_branch(
+    md: TableMetadata, branch: str, snapshot_id: int, timestamp_ms: int
+) -> TableMetadata:
+    """Point ``branch`` at ``snapshot_id``, keeping its ref's retention.
+    Moving main also makes the snapshot current and logs it. The
+    snapshot log is the TIMESTAMP AS OF index — "when did main change"
+    — so a side-branch move is never logged: time travel would resolve
+    to a snapshot that was never current (Iceberg's snapshot-log has
+    the same main-only rule)."""
+    old = md.refs.get(branch)
+    ref = (
+        dataclasses.replace(old, snapshot_id=snapshot_id, type="branch")
+        if old is not None
+        else Reference(snapshot_id=snapshot_id, type="branch")
+    )
+    md = md.evolve(refs={**md.refs, branch: ref})
+    if branch != MAIN_BRANCH:
+        return md
+    return md.evolve(
+        current_snapshot_id=snapshot_id,
+        snapshot_log=md.snapshot_log + (SnapshotLogEntry(snapshot_id, timestamp_ms),),
+    )
+
+
+def _ancestors(md: TableMetadata, snapshot_id: int | None) -> Iterable[Snapshot]:
+    """The snapshot ``snapshot_id`` and its ancestors, newest first. The
+    walk ends at the root or at a parent expire_snapshots removed."""
+    by_id = {s.snapshot_id: s for s in md.snapshots}
+    snap = by_id.get(snapshot_id)
+    while snap is not None:
+        yield snap
+        snap = by_id.get(snap.parent_snapshot_id)
+
+
 def _ancestry(md: TableMetadata, end: int, start: int | None) -> list[Snapshot]:
     """Snapshots from ``end`` back along the parent chain, newest
     first, stopping before ``start`` (exclusive; None walks to the
-    root). Raises KeyError when ``start`` is not an ancestor of
-    ``end``."""
+    oldest retained ancestor). Raises KeyError when ``start`` is not an
+    ancestor of ``end``."""
+    md.snapshot_by_id(end)  # must exist
     chain: list[Snapshot] = []
-    cur: Snapshot | None = md.snapshot_by_id(end)
-    while cur is not None and cur.snapshot_id != start:
-        chain.append(cur)
-        cur = (
-            md.snapshot_by_id(cur.parent_snapshot_id)
-            if cur.parent_snapshot_id is not None
-            else None
-        )
-    if start is not None and cur is None:
+    for snap in _ancestors(md, end):
+        if snap.snapshot_id == start:
+            return chain
+        chain.append(snap)
+    if start is not None:
         raise KeyError(f"snapshot {start} is not an ancestor of {end}")
     return chain
 

@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from iceberg_rs_spark.sources.fixtures import load_table
-from iceberg_rs_spark.sources.icelake import Catalog, _split_by_predicate
+from iceberg_rs_spark.sources.icelake import Catalog, CommitConflict, _split_by_predicate
 
 
 @pytest.fixture()
@@ -1833,6 +1833,301 @@ class TestMergeOnReadDeletes:
         out = t.to_df()
         assert out.where("amount > 0.5").count() == 0
         assert out.count() == 50 - n and n > 0
+
+    def test_snapshot_totals_count_data_files_only(self, catalog, events_df):
+        """``total-records`` and ``total-data-files`` count data files;
+        delete files are counted in ``total-delete-files``."""
+        t = catalog.create_table("db.mortot", events_df.schema)
+        t.append(events_df.limit(100))
+        assert t.delete("event_type = 'click'", mode="merge-on-read") > 0
+        summary = t.metadata.snapshots[-1].summary
+        files = t.files().collect()
+        data = [r for r in files if r.content == "data"]
+        assert int(summary["total-records"]) == sum(r.record_count for r in data)
+        assert int(summary["total-data-files"]) == len(data)
+        assert int(summary["total-delete-files"]) == len(files) - len(data) > 0
+        # the added counts come from the added entries, for every kind
+        t.merge(events_df.limit(3), on=["event_id"], mode="merge-on-read")
+        summary = t.metadata.snapshots[-1].summary
+        assert int(summary["added-records"]) == 3
+        assert int(summary["added-data-files"]) >= 1
+        assert int(summary["added-delete-files"]) >= 1
+
+
+_MATRIX_BASE = {i: (i % 3, i) for i in range(12)}  # id: (grp, val)
+
+
+def _matrix_state(drop=(), put=()):
+    state = dict(_MATRIX_BASE)
+    for i in drop:
+        state.pop(i)
+    for i, g, v in put:
+        state[i] = (g, v)
+    return sorted((i, g, v) for i, (g, v) in state.items())
+
+
+def _matrix_add_raw(c):
+    """Set an identity name mapping and write a raw parquet file."""
+    import json
+
+    from iceberg_rs_spark.model import NameMapping
+
+    mapping = [NameMapping(field_id=f.id, names=(f.name,)) for f in c.t.schema().fields]
+    c.t.set_properties(
+        **{"schema.name-mapping.default": json.dumps([m.to_json() for m in mapping])}
+    )
+    c.df([(700, 0, 700)]).write.parquet(c.raw)
+
+
+#: (commit, concurrent commit) cells: setup, foreground op, concurrent
+#: op, the foreground's refusal (None: it commits) and the final rows
+_MATRIX = {
+    "rewrite_position_deletes-vs-mor_delete": (
+        lambda c: c.t.delete("id = 1", mode="merge-on-read"),
+        lambda c: c.t.rewrite_position_deletes(),
+        lambda c: c.t2.delete("id = 4", mode="merge-on-read"),
+        (CommitConflict, "merge-on-read"),
+        _matrix_state(drop=(1, 4)),
+    ),
+    "rewrite_position_deletes-vs-append": (
+        lambda c: c.t.delete("id = 1", mode="merge-on-read"),
+        lambda c: c.t.rewrite_position_deletes(),
+        lambda c: c.t2.append(c.df([(40, 1, 40)])),
+        None,
+        _matrix_state(drop=(1,), put=[(40, 1, 40)]),
+    ),
+    "overwrite_partitions-vs-append": (
+        None,
+        lambda c: c.t.overwrite_partitions(c.df([(100, 0, 100)])),
+        lambda c: c.t2.append(c.df([(200, 1, 200), (201, 0, 201)])),
+        None,
+        # the appended grp-0 row sits in a partition the overwrite replaces
+        _matrix_state(drop=(0, 3, 6, 9), put=[(100, 0, 100), (200, 1, 200)]),
+    ),
+    "overwrite_partitions-vs-mor_delete": (
+        None,
+        lambda c: c.t.overwrite_partitions(c.df([(100, 0, 100)])),
+        lambda c: c.t2.delete("id IN (1, 3)", mode="merge-on-read"),
+        None,
+        _matrix_state(drop=(0, 1, 3, 6, 9), put=[(100, 0, 100)]),
+    ),
+    "overwrite-vs-append": (
+        None,
+        lambda c: c.t.overwrite(c.df([(500, 0, 500)])),
+        lambda c: c.t2.append(c.df([(600, 1, 600)])),
+        None,
+        _matrix_state(drop=range(12), put=[(500, 0, 500)]),
+    ),
+    "mor_delete-vs-mor_delete": (
+        None,
+        lambda c: c.t.delete("id = 2", mode="merge-on-read"),
+        lambda c: c.t2.delete("id = 5", mode="merge-on-read"),
+        None,
+        _matrix_state(drop=(2, 5)),
+    ),
+    "mor_delete-vs-cow_delete_of_other_files": (
+        None,
+        lambda c: c.t.delete("grp = 2 AND id = 2", mode="merge-on-read"),
+        lambda c: c.t2.delete("grp = 1 AND id = 4"),
+        None,
+        _matrix_state(drop=(2, 4)),
+    ),
+    "mor_merge-vs-compact": (
+        None,
+        lambda c: c.t.merge(
+            c.df([(1, 1, 999), (300, 0, 300)]), on=["id"], mode="merge-on-read"
+        ),
+        lambda c: c.t2.compact(target_file_size_bytes=1),
+        None,
+        _matrix_state(put=[(1, 1, 999), (300, 0, 300)]),
+    ),
+    "compact-vs-mor_merge": (
+        None,
+        lambda c: c.t.compact(target_file_size_bytes=1),
+        lambda c: c.t2.merge(c.df([(1, 1, 999)]), on=["id"], mode="merge-on-read"),
+        (CommitConflict, "merge-on-read"),
+        _matrix_state(put=[(1, 1, 999)]),
+    ),
+    "cow_delete-vs-mor_merge": (
+        None,
+        lambda c: c.t.delete("id = 2"),
+        lambda c: c.t2.merge(c.df([(1, 1, 999)]), on=["id"], mode="merge-on-read"),
+        (CommitConflict, "concurrent"),
+        _matrix_state(put=[(1, 1, 999)]),
+    ),
+    "cow_merge-vs-mor_delete": (
+        None,
+        lambda c: c.t.merge(c.df([(1, 1, 999)]), on=["id"]),
+        lambda c: c.t2.delete("id = 4", mode="merge-on-read"),
+        (CommitConflict, "concurrent"),
+        _matrix_state(drop=(4,)),
+    ),
+    "add_files-vs-add_files_of_the_same_path": (
+        _matrix_add_raw,
+        lambda c: c.t.add_files(c.raw),
+        lambda c: c.t2.add_files(c.raw),
+        (ValueError, "already registered"),
+        _matrix_state(put=[(700, 0, 700)]),
+    ),
+}
+
+
+class TestConflictMatrix:
+    """One commit against one concurrent commit, per cell: the
+    concurrent writer takes the version slot the foreground commit
+    reaches first (the racy ``_write_metadata_version`` injection of
+    ``TestAdviceR2Fixes``), and the foreground retries on top of it.
+    Each cell pins the outcome — commit or refusal — and the rows the
+    table holds after it."""
+
+    @pytest.mark.parametrize("cell", list(_MATRIX))
+    def test_commit_against_concurrent_commit(
+        self, cell, catalog, spark, tmp_path, monkeypatch
+    ):
+        self._race(cell, _MATRIX[cell], catalog, spark, tmp_path, monkeypatch)
+
+    def test_cow_delete_commits_after_unread_delete_file_left(
+        self, catalog, spark, tmp_path, monkeypatch
+    ):
+        """The concurrent delete rewrites the grp-1 file and with it
+        drops the position-delete file that pointed only there. The
+        foreground rewrote a grp-0 file, which that delete file never
+        touched, so the commit is safe and lands."""
+        self._race(
+            "cow_delete-vs-cow_delete_dropping_a_delete_file",
+            (
+                lambda c: c.t.delete("grp = 1 AND id = 1", mode="merge-on-read"),
+                lambda c: c.t.delete("grp = 0 AND id = 3"),
+                lambda c: c.t2.delete("grp = 1 AND id = 4"),
+                None,
+                _matrix_state(drop=(1, 3, 4)),
+            ),
+            catalog, spark, tmp_path, monkeypatch,
+        )
+
+    @staticmethod
+    def _race(cell, spec, catalog, spark, tmp_path, monkeypatch):
+        import types
+
+        import iceberg_rs_spark.sources.icelake as lake
+
+        setup, fg, conc, refusal, final = spec
+
+        def df(rows):
+            return spark.createDataFrame(rows, "id long, grp long, val long")
+
+        name = "db.m_" + cell.replace("-", "_")
+        t = catalog.create_table(name, df([]).schema, partition_by=["grp"])
+        t.append(df([(i, g, v) for i, (g, v) in _MATRIX_BASE.items()]))
+        c = types.SimpleNamespace(
+            t=t, t2=catalog.load_table(name), df=df, raw=str(tmp_path / "raw")
+        )
+        if setup:
+            setup(c)
+        orig = lake._write_metadata_version
+        state = {"raced": False}
+
+        def racy(location, version, md):
+            if not state["raced"]:
+                state["raced"] = True
+                monkeypatch.setattr(lake, "_write_metadata_version", orig)
+                conc(c)  # the concurrent writer takes this slot
+                monkeypatch.setattr(lake, "_write_metadata_version", racy)
+                raise FileExistsError(version)
+            return orig(location, version, md)
+
+        monkeypatch.setattr(lake, "_write_metadata_version", racy)
+        if refusal is None:
+            fg(c)
+        else:
+            with pytest.raises(refusal[0], match=refusal[1]):
+                fg(c)
+        monkeypatch.undo()
+        assert state["raced"]
+        assert sorted((r.id, r.grp, r.val) for r in t.scan().collect()) == final
+
+
+class TestHistoryAfterExpiry:
+    """Branch moves keep the ref's retention, and the history readers
+    walk ancestry that expire_snapshots has cut short."""
+
+    @staticmethod
+    def _mk(spark, catalog, name):
+        df = spark.range(12).select(F.col("id"), (F.col("id") * 10).cast("double").alias("v"))
+        return catalog.create_table(name, df.schema), df
+
+    def test_rollback_keeps_main_retention(self, spark, catalog):
+        t, df = self._mk(spark, catalog, "db.rbret")
+        t.append(df.where("id < 3"))
+        s1 = t.metadata.current_snapshot_id
+        t.create_branch("main", s1, min_snapshots_to_keep=5, max_snapshot_age_ms=10**9)
+        t.append(df.where("id >= 3 AND id < 6"))
+        t.rollback_to_snapshot(s1)
+        ref = t.metadata.refs["main"]
+        assert (ref.snapshot_id, ref.min_snapshots_to_keep, ref.max_snapshot_age_ms) == (
+            s1, 5, 10**9,
+        )
+        t.append(df.where("id >= 6"))
+        # main's chain is two snapshots long; retention keeps both
+        t.expire_snapshots(retain_last=1)
+        assert s1 in {s.snapshot_id for s in t.metadata.snapshots}
+        assert t.scan(snapshot_id=s1).count() == 3
+
+    def test_scans_without_start_after_expire(self, spark, catalog):
+        t, df = self._mk(spark, catalog, "db.expscan")
+        for lo in (0, 3, 6):
+            t.append(df.where(f"id >= {lo} AND id < {lo + 3}"))
+        t.expire_snapshots(retain_last=1)
+        assert sorted(r.id for r in t.incremental_scan().collect()) == list(range(9))
+        rows = t.changelog_scan().collect()
+        assert sorted((r.id, r["_change_type"]) for r in rows) == [
+            (i, "insert") for i in (6, 7, 8)
+        ]
+        # a replace inside the retained chain: still the whole table
+        t.compact(target_file_size_bytes=1)
+        t.append(df.where("id >= 9"))
+        t.expire_snapshots(retain_last=2)
+        assert sorted(r.id for r in t.incremental_scan().collect()) == list(range(12))
+        with pytest.raises(KeyError, match="ancestor"):
+            t.incremental_scan(start_snapshot_id=12345)
+
+    def test_changelog_diff_needs_its_parent(self, spark, catalog):
+        t, df = self._mk(spark, catalog, "db.expdiff")
+        t.append(df.where("id < 6"))
+        t.append(df.where("id >= 6"))
+        t.delete("id = 1", mode="merge-on-read")
+        sid = t.metadata.current_snapshot_id
+        t.expire_snapshots(retain_last=1)
+        with pytest.raises(ValueError, match=str(sid)):
+            t.changelog_scan()
+
+    def test_changelog_append_reads_only_its_own_manifest(
+        self, spark, catalog, monkeypatch
+    ):
+        import dataclasses
+
+        t, df = self._mk(spark, catalog, "db.clown")
+        for lo in (0, 4, 8):
+            t.append(df.where(f"id >= {lo} AND id < {lo + 4}"))
+        snaps = [s.snapshot_id for s in t.metadata.snapshots]
+        cls = type(t)
+        orig = cls._read_manifest
+        calls: list[int] = []
+
+        def counting(self, snap):
+            calls.append(snap.snapshot_id)
+            return orig(self, snap)
+
+        monkeypatch.setattr(cls, "_read_manifest", counting)
+        assert sorted(r.id for r in t.changelog_scan().collect()) == list(range(12))
+        assert sorted(calls) == sorted(snaps)
+
+        def unstamped(self, snap):
+            return [dataclasses.replace(e, sequence_number=None) for e in orig(self, snap)]
+
+        monkeypatch.setattr(cls, "_read_manifest", unstamped)
+        with pytest.raises(ValueError, match="sequence numbers"):
+            t.changelog_scan()
 
 
 class TestEqualityDeleteUpserts:
